@@ -623,7 +623,11 @@ SPARK_ONLY_SQL = {
     # re-shuffled raw rows; this one removes the Expand entirely.
     # Equivalence: 10/10 rows equal at sf10 by direct comparison,
     # oracle hash-exact at sf0.001/0.01/0.1, NULL/empty-input edge
-    # cases pinned by tests/test_rollup_hier.py.
+    # cases pinned by tests/test_rollup_hier.py against Spark's own
+    # ROLLUP. Known oracle divergence: on an EMPTY lineitem both Spark
+    # forms return zero rows while the DuckDB oracle (DUCK_ONLY_SQL)
+    # returns one grand-total row (NULL, NULL, 0, 0); the fixtures
+    # never have an empty lineitem.
     "q_rollup_status": """
         WITH level0 AS (
             SELECT l_returnflag, l_linestatus, l_orderkey,
@@ -699,7 +703,9 @@ SPARK_ONLY_SQL = {
 }
 DUCK_ONLY_SQL = {
     # the direct ROLLUP form — kept as the independent oracle for the
-    # Spark side's hierarchical-dedup rewrite (see SPARK_ONLY_SQL)
+    # Spark side's hierarchical-dedup rewrite (see SPARK_ONLY_SQL).
+    # On empty input DuckDB emits a (NULL, NULL, 0, 0) grand-total row
+    # where Spark emits none — the one known divergence.
     "q_rollup_status": """
         SELECT l_returnflag, l_linestatus, COUNT(*) AS n_items,
                COUNT(DISTINCT l_orderkey) AS n_orders

@@ -77,14 +77,12 @@ def load_table(spark, sf_dir: str, name: str):
     """
     from pyspark.sql import functions as F
 
+    from .session import scoped_conf
+
     path = f"{sf_dir.rstrip('/')}/{name}.parquet"
-    key = "spark.sql.legacy.parquet.nanosAsLong"
-    previous = spark.conf.get(key, "false")
-    spark.conf.set(key, "true")
-    try:
+    with scoped_conf(spark,
+                     **{"spark.sql.legacy.parquet.nanosAsLong": "true"}):
         df = spark.read.parquet(path)
-    finally:
-        spark.conf.set(key, previous)
     converted = False
     for field_name, dtype in df.dtypes:
         if field_name == "ts" and dtype == "bigint":

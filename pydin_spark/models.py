@@ -442,16 +442,9 @@ class Parquet(FileModel):
                 .where((F.col(key_field_label) != F.lit(key_value))
                        | F.col(key_field_label).isNull())
                 .localCheckpoint())
-        spark = self.spark
-        previous = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                                  "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (kept.write.mode("overwrite").partitionBy(*self.partition_by)
-             .format(self.format_name).save(self.resolved_path))
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                           previous)
+        (kept.write.mode("overwrite").partitionBy(*self.partition_by)
+         .option("partitionOverwriteMode", "dynamic")
+         .format(self.format_name).save(self.resolved_path))
         # dynamic overwrite never touches partitions with no surviving
         # rows — delete those directories explicitly
         survived = {tuple(r) for r in (kept.select(*self.partition_by)
@@ -465,7 +458,7 @@ class Parquet(FileModel):
                   for c in self.partition_by])
             if os.path.isdir(part_dir):
                 shutil.rmtree(part_dir)
-        spark.catalog.refreshByPath(self.resolved_path)
+        self.spark.catalog.refreshByPath(self.resolved_path)
 
 
 class ORC(Parquet):

@@ -834,9 +834,11 @@ def _cap_buckets(buckets: DataFrame, max_bucket_size: int | None,
     # a singleton bucket yields only the self-pair the enumerators
     # exclude, so its rows are dead weight in the self-join — the
     # bucket analogue of :func:`_pairable_postings` (round-11,
-    # output-identical). The count is already on every row here; on a
-    # real corpus most buckets hold one doc, so this sheds the BULK of
-    # the join input for one extra codegen'd comparison.
+    # output-identical). Capped path only: the count is already on
+    # every row here, so when a cap is set this sheds the BULK of the
+    # join input (on a real corpus most buckets hold one doc) for one
+    # extra codegen'd comparison; the uncapped path returns above and
+    # keeps its singletons.
     return sized.where((F.col("__bsz") >= 2)
                        & (F.col("__bsz") <= max_bucket_size)) \
         .drop("__bsz")

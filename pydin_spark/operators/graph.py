@@ -20,32 +20,24 @@ below any ranking-relevant difference.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, functions as F
+
+from ..session import scoped_conf
 
 #: fixed-point scale: 1.0 of rank mass == 10^12 units
 SCALE = 10 ** 12
 
 
-@contextmanager
-def _aqe_off(spark):
-    """Disable AQE for a materialization. AdaptiveSparkPlanExec
-    reports UnknownPartitioning to ``localCheckpoint``, so a frame
-    checkpointed under AQE loses its hash partitioning and every
-    downstream join re-shuffles it; with AQE off for the eager
-    checkpoint the LogicalRDD keeps ``hashpartitioning(key, n)`` and
-    the planner elides the per-iteration exchanges (verified: one
-    Exchange per iteration — the contribution sum — instead of
-    three). AQE's runtime re-planning has nothing to offer these
-    fixed-shape, fixed-count iteration queries."""
-    key = "spark.sql.adaptive.enabled"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
+#: AQE off for an eager ``localCheckpoint``: AdaptiveSparkPlanExec
+#: reports UnknownPartitioning to ``localCheckpoint``, so a frame
+#: checkpointed under AQE loses its hash partitioning and every
+#: downstream join re-shuffles it; with AQE off for the eager
+#: checkpoint the LogicalRDD keeps ``hashpartitioning(key, n)`` and
+#: the planner elides the per-iteration exchanges (verified: one
+#: Exchange per iteration — the contribution sum — instead of three).
+#: AQE's runtime re-planning has nothing to offer these fixed-shape,
+#: fixed-count iteration queries. Still needed on Spark 4.1.2.
+_AQE_OFF = {"spark.sql.adaptive.enabled": "false"}
 
 
 def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
@@ -126,7 +118,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     # outputPartitioning visible to the planner)
     spark = edges.sparkSession
     nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    with _aqe_off(spark):
+    with scoped_conf(spark, **_AQE_OFF):
         nodes = (e.select(F.col("__src").alias(id_out))
                  .union(e.select(F.col("__dst").alias(id_out)))
                  .distinct()
@@ -170,7 +162,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
             # next iteration's edges⋈rank and nodes⋈sums joins then
             # run exchange-free against the pre-partitioned statics —
             # the per-iteration shuffle is ONLY the contribution sum
-            with _aqe_off(spark):
+            with scoped_conf(spark, **_AQE_OFF):
                 r = r.localCheckpoint(eager=True)
     return r
 
@@ -222,7 +214,7 @@ def label_propagation(edges: DataFrame, src: str = "src",
                              F.col("__src").alias("__dst")))
     spark = edges.sparkSession
     nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    with _aqe_off(spark):
+    with scoped_conf(spark, **_AQE_OFF):
         ed = e.repartition(nparts, "__src").localCheckpoint(eager=True)
         nodes = (e.select(F.col("__src").alias(id_out))
                  .union(e.select(F.col("__dst").alias(id_out)))
@@ -246,7 +238,7 @@ def label_propagation(edges: DataFrame, src: str = "src",
                      F.coalesce(F.col("__new"), r["label"])
                      .alias("label")))
         if checkpoint:
-            with _aqe_off(spark):
+            with scoped_conf(spark, **_AQE_OFF):
                 r = r.localCheckpoint(eager=True)
     return r
 
@@ -310,7 +302,7 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
                 & F.col("__dst").isNotNull()))
     spark = edges.sparkSession
     nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    with _aqe_off(spark):
+    with scoped_conf(spark, **_AQE_OFF):
         nodes = (e.select(F.col("__src").alias(id_out))
                  .union(e.select(F.col("__dst").alias(id_out)))
                  .distinct()
@@ -358,7 +350,7 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
                            .cast("long").alias("hub_fp")))
         r = _normalize(hub_all, "hub_fp")
         if checkpoint:
-            with _aqe_off(spark):
+            with scoped_conf(spark, **_AQE_OFF):
                 r = r.localCheckpoint(eager=True)
                 auth = auth.localCheckpoint(eager=True)
     return (nodes.join(auth, id_out, "left")
@@ -684,7 +676,7 @@ def kcore(edges: DataFrame, k: int = 2, rounds: int = 10,
                                F.col("__a").alias("__v")))
     spark = edges.sparkSession
     nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    with _aqe_off(spark):
+    with scoped_conf(spark, **_AQE_OFF):
         cur = sym.repartition(nparts, "__u").localCheckpoint(eager=True)
     for _ in range(int(rounds)):
         deg = cur.groupBy("__u").agg(F.count(F.lit(1)).alias("__dg"))
@@ -693,7 +685,7 @@ def kcore(edges: DataFrame, k: int = 2, rounds: int = 10,
                .join(keep.select(F.col("__u").alias("__v")),
                      "__v", "left_semi"))
         if checkpoint:
-            with _aqe_off(spark):
+            with scoped_conf(spark, **_AQE_OFF):
                 cur = (cur.repartition(nparts, "__u")
                        .localCheckpoint(eager=True))
     out = (cur.groupBy(F.col("__u").alias(id_out))

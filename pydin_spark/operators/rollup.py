@@ -26,6 +26,8 @@ Scale notes:
 
 from __future__ import annotations
 
+import datetime as dt
+
 from pyspark.sql import DataFrame, functions as F
 
 
@@ -127,34 +129,24 @@ def coarsen(rollup_df: DataFrame, bucket: str,
                     *group_cols, *cols))
 
 
-class ContinuousRollup:
-    """Incrementally-maintained rollup stored as bucket-partitioned
-    parquet at ``path``.
+class _BucketState:
+    """Machinery shared by the stored bucket states
+    (:class:`ContinuousRollup`, :class:`StoredHeavyHitters`,
+    :class:`StoredBloom`, :class:`StoredCMS`): per-bucket state stored
+    as parquet at ``path``, partitioned by ``bucket_start``.
 
-    ``refresh(events_df)`` recomputes only buckets >= the sink's
-    high-water bucket minus ``lateness`` buckets and rewrites exactly
-    those partitions (dynamic partition overwrite). A fresh sink is a
-    full build. ``read()`` returns the current rollup; ``lag/lateness``
-    semantics follow streaming watermarks: events older than the
-    recompute window are ignored by design (bound it generously).
+    A family supplies ``_summarize(events)`` (its per-bucket state,
+    keyed by ``bucket_start``), ``_columns`` (the stored columns after
+    ``bucket_start``, in canonical order) and ``_kind`` (its name in
+    the no-state error), plus its own serve-time merge.
     """
 
-    def __init__(self, path: str, ts_col: str = "ts",
-                 bucket: str = "1 hour",
-                 group_cols: tuple[str, ...] = ("event_type",),
-                 value_col: str = "value", lateness: int = 0,
-                 distinct_col: str | None = None):
+    def __init__(self, path: str, ts_col: str, bucket: str,
+                 lateness: int):
         self.path = path
         self.ts_col = ts_col
         self.bucket = bucket
-        self.group_cols = tuple(group_cols)
-        self.value_col = value_col
         self.lateness = int(lateness)
-        self.distinct_col = distinct_col
-
-    # -- helpers -----------------------------------------------------------
-    def _spark(self, df: DataFrame):
-        return df.sparkSession
 
     def _exists(self, spark) -> bool:
         try:
@@ -173,15 +165,18 @@ class ContinuousRollup:
             raise
 
     def read(self, spark) -> DataFrame:
-        # partitioned parquet reads append the partition column last;
-        # restore the canonical rollup column order (the partition
-        # value round-trips as a timestamp via partition type inference)
-        extra = (["distinct_sketch"] if self.distinct_col is not None
-                 else [])
+        """The stored state in canonical column order (partitioned
+        parquet reads append the partition column last; its value
+        round-trips as a timestamp via partition type inference).
+        Raises a clear error when no state has been stored yet — an
+        all-empty refresh history leaves nothing on disk."""
+        if not self._exists(spark):
+            raise ValueError(
+                f"no stored {self._kind} state at {self.path} — "
+                "refresh() with a non-empty source first")
         return (spark.read.parquet(self.path)
                 .select(F.col("bucket_start").cast("timestamp"),
-                        *self.group_cols, "n_events", "total_value",
-                        *extra))
+                        *self._columns))
 
     def maintain(self, spark, max_files: int = 64,
                  target_file_bytes: int = 128 * 1024 * 1024) -> dict:
@@ -198,74 +193,120 @@ class ContinuousRollup:
             target_file_bytes=target_file_bytes,
             partition_by=["bucket_start"])
 
-    def _bucket_seconds(self, spark) -> int:
+    def _bucket_seconds(self, spark, bucket: str | None = None) -> int:
         # derive the bucket width from a probe window rather than
         # parsing the duration string ourselves
         probe = (spark.range(1)
                  .select(F.window(F.lit("1970-01-01 00:00:00")
-                                  .cast("timestamp"), self.bucket)
-                         .alias("w"))
+                                  .cast("timestamp"),
+                                  bucket or self.bucket).alias("w"))
                  .select((F.unix_timestamp("w.end")
                           - F.unix_timestamp("w.start")).alias("s")))
         return probe.first()["s"]
 
-    # -- the refresh -------------------------------------------------------
     def refresh(self, events: DataFrame) -> DataFrame:
-        """Refresh the rollup from the append-only event source;
-        returns the refreshed frame.
+        """Fold the append-only event source into the stored state;
+        returns the refreshed state (a typed empty frame while an
+        empty source leaves nothing stored).
 
         CONTRACT: ``events`` must be the full event source (or at
         minimum contain EVERY event of every bucket in the recompute
         window) — recomputed buckets are rebuilt from this frame alone
         and dynamically overwritten, so passing only the new tail would
-        replace the open bucket's aggregate with a partial one. The
+        replace the open bucket's state with a partial one. The
         source is only ever *scanned* from the recompute floor (the
         Column predicate prunes partitions/row groups), so passing the
         full table costs the tail, not the history.
 
-        Recompute window: all buckets >= (sink max bucket − lateness
+        Recompute window: all buckets >= (stored max bucket − lateness
         buckets). Everything older is immutable and untouched. Bucket
         arithmetic assumes fixed-width buckets (epoch-aligned, as the
         session pins UTC — with a DST-shifting session timezone,
         calendar-width buckets like '1 day' would misalign).
         """
-        spark = self._spark(events)
-        if not self._exists(spark):
-            # cluster by the partition column before the partitioned
-            # write (tasks x buckets sliver files otherwise)
-            out = rollup_aggregate(events, self.ts_col, self.bucket,
-                                   self.group_cols, self.value_col,
-                                   self.distinct_col
-                                   ).repartition("bucket_start")
-            (out.write.mode("overwrite").partitionBy("bucket_start")
-             .parquet(self.path))
-            spark.catalog.refreshByPath(self.path)
-            return self.read(spark)
-
-        current = self.read(spark)
-        high = current.agg(F.max("bucket_start").alias("m")).first()["m"]
-        # recompute floor = high-water bucket minus `lateness` whole
-        # buckets, done in Python on the plain timestamp (the sink's
-        # max bucket is a 1-row aggregate on the PRE-AGGREGATED frame,
-        # never a scan of the event history)
-        import datetime as dt
-        secs = self._bucket_seconds(spark)
-        floor = high - dt.timedelta(seconds=secs * self.lateness)
-        fresh = rollup_aggregate(
-            events.where(F.col(self.ts_col) >= F.lit(floor)),
-            self.ts_col, self.bucket, self.group_cols, self.value_col,
-            self.distinct_col).repartition("bucket_start")
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                              "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                       "dynamic")
-        try:
-            (fresh.write.mode("overwrite").partitionBy("bucket_start")
-             .parquet(self.path))
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        spark = events.sparkSession
+        first = not self._exists(spark)
+        if not first:
+            # recompute floor = high-water bucket minus `lateness` whole
+            # buckets, done in Python on the plain timestamp (the max
+            # bucket is a 1-row aggregate on the stored state, never a
+            # scan of the event history)
+            high = (self.read(spark)
+                    .agg(F.max("bucket_start").alias("m")).first()["m"])
+            floor = high - dt.timedelta(
+                seconds=self._bucket_seconds(spark) * self.lateness)
+            events = events.where(F.col(self.ts_col) >= F.lit(floor))
+        # cluster by the partition column before the partitioned write
+        # (tasks x buckets sliver files otherwise). The overwrite mode
+        # is a per-write option, not the session conf, so threads
+        # sharing the session keep their own: a first build replaces
+        # the path, a refresh only the recomputed bucket partitions.
+        out = self._summarize(events).repartition("bucket_start")
+        (out.write.mode("overwrite").partitionBy("bucket_start")
+         .option("partitionOverwriteMode", "static" if first else "dynamic")
+         .parquet(self.path))
         spark.catalog.refreshByPath(self.path)
+        if first and not self._exists(spark):
+            # an empty source writes no data files (partitioned parquet
+            # keeps no schema for zero rows): stay in the "first build
+            # pending" state and return a typed empty
+            return spark.createDataFrame([], out.schema)
         return self.read(spark)
+
+    def _at_grain(self, spark, bucket: str | None):
+        """The stored state for a serve at ``bucket`` and the group
+        columns its merge keeps: as stored with none for
+        ``bucket=None`` (one merge over the whole history), else
+        re-bucketed to ``bucket``. Finer or misaligned grains are
+        refused: re-bucketing day-grain state to hours would pile each
+        day's state onto its first hour and serve it as exact —
+        confidently wrong, so error out."""
+        s = self.read(spark)
+        if bucket is None:
+            return s, ()
+        stored_s = self._bucket_seconds(spark)
+        req_s = self._bucket_seconds(spark, bucket)
+        if req_s < stored_s or req_s % stored_s:
+            raise ValueError(
+                f"serve bucket {bucket!r} ({req_s}s) must be a whole "
+                f"multiple of the stored bucket {self.bucket!r} "
+                f"({stored_s}s)")
+        return (s.withColumn("bucket_start",
+                             F.window("bucket_start", bucket)["start"]),
+                ("bucket_start",))
+
+
+class ContinuousRollup(_BucketState):
+    """Incrementally-maintained rollup stored as bucket-partitioned
+    parquet at ``path``.
+
+    ``refresh(events_df)`` recomputes only buckets >= the sink's
+    high-water bucket minus ``lateness`` buckets and rewrites exactly
+    those partitions (dynamic partition overwrite). A fresh sink is a
+    full build. ``read()`` returns the current rollup; ``lag/lateness``
+    semantics follow streaming watermarks: events older than the
+    recompute window are ignored by design (bound it generously).
+    """
+
+    _kind = "rollup"
+
+    def __init__(self, path: str, ts_col: str = "ts",
+                 bucket: str = "1 hour",
+                 group_cols: tuple[str, ...] = ("event_type",),
+                 value_col: str = "value", lateness: int = 0,
+                 distinct_col: str | None = None):
+        super().__init__(path, ts_col, bucket, lateness)
+        self.group_cols = tuple(group_cols)
+        self.value_col = value_col
+        self.distinct_col = distinct_col
+        self._columns = (*self.group_cols, "n_events", "total_value",
+                         *(("distinct_sketch",) if distinct_col is not None
+                           else ()))
+
+    def _summarize(self, events: DataFrame) -> DataFrame:
+        return rollup_aggregate(events, self.ts_col, self.bucket,
+                                self.group_cols, self.value_col,
+                                self.distinct_col)
 
 
 def theta_slice_sketches(df: DataFrame, slice_col: str,
@@ -508,7 +549,7 @@ def hh_topk(summary: DataFrame, k: int = 50,
             .select(*gcols, "item", "est_count", "err_ub", "rank"))
 
 
-class StoredHeavyHitters:
+class StoredHeavyHitters(_BucketState):
     """Incrementally-maintained per-bucket heavy-hitter STATE stored as
     bucket-partitioned parquet — the frequent-items companion to
     :class:`ContinuousRollup`'s HLL/KLL/Theta sketch columns.
@@ -534,98 +575,24 @@ class StoredHeavyHitters:
     merging sums the error, never hides it.
     """
 
+    _kind = "heavy-hitter"
+
     def __init__(self, path: str, item_col: str, ts_col: str = "ts",
                  bucket: str = "1 hour", capacity: int = 4096,
                  group_cols: tuple[str, ...] = (), lateness: int = 0):
-        self.path = path
+        super().__init__(path, ts_col, bucket, lateness)
         self.item_col = item_col
-        self.ts_col = ts_col
-        self.bucket = bucket
         self.capacity = int(capacity)
         self.group_cols = tuple(group_cols)
-        self.lateness = int(lateness)
+        self._columns = (*self.group_cols, "item", "est")
 
     def _summarize(self, events: DataFrame) -> DataFrame:
         bucketed = events.withColumn(
             "bucket_start",
             F.window(self.ts_col, self.bucket)["start"])
-        # cluster by the partition column before the partitioned write:
-        # without this every shuffle task writes a sliver into every
-        # bucket directory (tasks x buckets small files — the classic
-        # partitioned-sink explosion); with it each bucket is one file
         return heavy_hitter_summaries(
             bucketed, self.item_col, self.capacity,
-            ("bucket_start", *self.group_cols)
-        ).repartition("bucket_start")
-
-    def read(self, spark) -> DataFrame:
-        """The stored summary frame in canonical column order (the
-        partition column round-trips via partition type inference).
-        Raises a clear error when no state has been stored yet —
-        an all-empty refresh history leaves nothing on disk."""
-        if not ContinuousRollup(self.path, self.ts_col,
-                                self.bucket)._exists(spark):
-            raise ValueError(
-                f"no stored heavy-hitter state at {self.path} — "
-                "refresh() with a non-empty source first")
-        return (spark.read.parquet(self.path)
-                .select(F.col("bucket_start").cast("timestamp"),
-                        *self.group_cols, "item", "est"))
-
-    def maintain(self, spark, max_files: int = 64,
-                 target_file_bytes: int = 128 * 1024 * 1024) -> dict:
-        """Compact fragmented summary state — see
-        :meth:`ContinuousRollup.maintain` (same layout, same
-        contract)."""
-        from ..functions.maintenance import compact_if_fragmented
-        return compact_if_fragmented(
-            spark, self.path, max_files=max_files,
-            target_file_bytes=target_file_bytes,
-            partition_by=["bucket_start"])
-
-    def refresh(self, events: DataFrame) -> DataFrame:
-        """Fold new events into the stored per-bucket summaries;
-        returns the refreshed summary frame.
-
-        Buckets strictly below (high-water − ``lateness``) are
-        immutable and untouched; everything at or above is rebuilt
-        from ``events`` (which must therefore contain every event of
-        the recompute window — the standard continuous-aggregate
-        contract) and swapped in via dynamic partition overwrite.
-        """
-        spark = events.sparkSession
-        probe = ContinuousRollup(self.path, self.ts_col, self.bucket)
-        if not probe._exists(spark):
-            out = self._summarize(events)
-            (out.write.mode("overwrite")
-             .partitionBy("bucket_start").parquet(self.path))
-            spark.catalog.refreshByPath(self.path)
-            if not probe._exists(spark):
-                # an empty source writes no data files (partitioned
-                # parquet keeps no schema for zero rows): stay in the
-                # "first build pending" state and return a typed empty
-                return spark.createDataFrame([], out.schema)
-            return self.read(spark)
-
-        high = (self.read(spark)
-                .agg(F.max("bucket_start").alias("m")).first()["m"])
-        import datetime as dt
-        secs = probe._bucket_seconds(spark)
-        floor = high - dt.timedelta(seconds=secs * self.lateness)
-        fresh = self._summarize(
-            events.where(F.col(self.ts_col) >= F.lit(floor)))
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                       "dynamic")
-        try:
-            (fresh.write.mode("overwrite").partitionBy("bucket_start")
-             .parquet(self.path))
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev)
-        spark.catalog.refreshByPath(self.path)
-        return self.read(spark)
+            ("bucket_start", *self.group_cols))
 
     def serve(self, spark, k: int = 50,
               bucket: str | None = None) -> DataFrame:
@@ -637,27 +604,10 @@ class StoredHeavyHitters:
         Output contract matches :func:`heavy_hitters` /
         :func:`hh_topk`: (…, item, est_count, err_ub, rank).
         """
-        s = self.read(spark)
-        if bucket is None:
-            merged = coarsen_hh(s, {}, keep_cols=self.group_cols)
-            return hh_topk(merged, k=k, group_cols=self.group_cols)
-        # refuse finer/misaligned grains: re-bucketing day-grain state
-        # to hours would pile each day's counts onto its first hour and
-        # report them with err_ub=0 — confidently wrong, so error out
-        probe = ContinuousRollup(self.path, self.ts_col, self.bucket)
-        stored_s = probe._bucket_seconds(spark)
-        req_s = ContinuousRollup(self.path, self.ts_col,
-                                 bucket)._bucket_seconds(spark)
-        if req_s < stored_s or req_s % stored_s:
-            raise ValueError(
-                f"serve bucket {bucket!r} ({req_s}s) must be a whole "
-                f"multiple of the stored bucket {self.bucket!r} "
-                f"({stored_s}s)")
-        merged = coarsen_hh(
-            s, {"bucket_start": F.window("bucket_start", bucket)["start"]},
-            keep_cols=self.group_cols)
-        return hh_topk(merged, k=k,
-                       group_cols=("bucket_start", *self.group_cols))
+        s, by = self._at_grain(spark, bucket)
+        by = (*by, *self.group_cols)
+        return hh_topk(coarsen_hh(s, {}, keep_cols=by), k=k,
+                       group_cols=by)
 
 
 # ---------------------------------------------------------------------------
@@ -786,7 +736,7 @@ def bloom_contains(df: DataFrame, bloom: DataFrame, item_col: str,
                           F.col(item_col).isNotNull() & hit).drop(*drop)
 
 
-class StoredBloom:
+class StoredBloom(_BucketState):
     """Incrementally-maintained per-bucket Bloom filters stored as
     bucket-partitioned parquet — the MEMBERSHIP member of the
     stored-state family next to :class:`ContinuousRollup` and
@@ -808,99 +758,30 @@ class StoredBloom:
     zero-probe-shuffle broadcast-join plan of :func:`bloom_contains`.
     """
 
+    _kind = "bloom"
+    _columns = ("word_idx", "bits")
+
     def __init__(self, path: str, item_col: str, ts_col: str = "ts",
                  bucket: str = "1 hour", m_bits: int = 1 << 17,
                  k_hashes: int = 3, lateness: int = 0):
-        self.path = path
+        super().__init__(path, ts_col, bucket, lateness)
         self.item_col = item_col
-        self.ts_col = ts_col
-        self.bucket = bucket
         self.m_bits = int(m_bits)
         self.k_hashes = int(k_hashes)
-        self.lateness = int(lateness)
 
     def _summarize(self, events: DataFrame) -> DataFrame:
         bucketed = events.withColumn(
             "bucket_start", F.window(self.ts_col, self.bucket)["start"])
-        # cluster by the partition column before the partitioned write
-        # (same sliver-file guard as the other stored-state sinks)
         return bloom_build(bucketed, self.item_col, m_bits=self.m_bits,
                            k_hashes=self.k_hashes,
-                           group_cols=("bucket_start",)) \
-            .repartition("bucket_start")
-
-    def read(self, spark) -> DataFrame:
-        if not ContinuousRollup(self.path, self.ts_col,
-                                self.bucket)._exists(spark):
-            raise ValueError(
-                f"no stored bloom state at {self.path} — refresh() "
-                "with a non-empty source first")
-        return (spark.read.parquet(self.path)
-                .select(F.col("bucket_start").cast("timestamp"),
-                        "word_idx", "bits"))
-
-    def maintain(self, spark, max_files: int = 64,
-                 target_file_bytes: int = 128 * 1024 * 1024) -> dict:
-        """Compact fragmented filter state — see
-        :meth:`ContinuousRollup.maintain` (same layout, same
-        contract)."""
-        from ..functions.maintenance import compact_if_fragmented
-        return compact_if_fragmented(
-            spark, self.path, max_files=max_files,
-            target_file_bytes=target_file_bytes,
-            partition_by=["bucket_start"])
-
-    def refresh(self, events: DataFrame) -> DataFrame:
-        spark = events.sparkSession
-        probe = ContinuousRollup(self.path, self.ts_col, self.bucket)
-        if not probe._exists(spark):
-            out = self._summarize(events)
-            (out.write.mode("overwrite")
-             .partitionBy("bucket_start").parquet(self.path))
-            spark.catalog.refreshByPath(self.path)
-            if not probe._exists(spark):
-                return spark.createDataFrame([], out.schema)
-            return self.read(spark)
-        high = (self.read(spark)
-                .agg(F.max("bucket_start").alias("m")).first()["m"])
-        import datetime as dt
-        secs = probe._bucket_seconds(spark)
-        floor = high - dt.timedelta(seconds=secs * self.lateness)
-        fresh = self._summarize(
-            events.where(F.col(self.ts_col) >= F.lit(floor)))
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                       "dynamic")
-        try:
-            (fresh.write.mode("overwrite").partitionBy("bucket_start")
-             .parquet(self.path))
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev)
-        spark.catalog.refreshByPath(self.path)
-        return self.read(spark)
+                           group_cols=("bucket_start",))
 
     def serve(self, spark, bucket: str | None = None) -> DataFrame:
         """The stored filter: global (bucket=None — one filter for the
         whole history), or per coarser-grain bucket. Finer/misaligned
-        grains are refused (the same silently-wrong-serve guard as
-        StoredHeavyHitters)."""
-        s = self.read(spark)
-        if bucket is None:
-            return bloom_merge(s)
-        probe = ContinuousRollup(self.path, self.ts_col, self.bucket)
-        stored_s = probe._bucket_seconds(spark)
-        req_s = ContinuousRollup(self.path, self.ts_col,
-                                 bucket)._bucket_seconds(spark)
-        if req_s < stored_s or req_s % stored_s:
-            raise ValueError(
-                f"serve bucket {bucket!r} ({req_s}s) must be a whole "
-                f"multiple of the stored bucket {self.bucket!r} "
-                f"({stored_s}s)")
-        rebucketed = s.withColumn(
-            "bucket_start", F.window("bucket_start", bucket)["start"])
-        return bloom_merge(rebucketed, group_cols=("bucket_start",))
+        grains are refused."""
+        s, by = self._at_grain(spark, bucket)
+        return bloom_merge(s, group_cols=by)
 
     def contains(self, df: DataFrame, item_col: str,
                  out_col: str = "maybe_seen") -> DataFrame:
@@ -1107,7 +988,7 @@ def cms_query(df: DataFrame, cms: DataFrame, item_col: str,
         F.when(F.col(item_col).isNotNull(), est)).drop(*drop)
 
 
-class StoredCMS:
+class StoredCMS(_BucketState):
     """Incrementally-maintained per-bucket Count-Min sketches stored
     as bucket-partitioned parquet — the FREQUENCY member of the
     stored-state family (:class:`ContinuousRollup` /
@@ -1132,99 +1013,32 @@ class StoredCMS:
     with :func:`cms_query`'s zero-probe-shuffle broadcast plan.
     """
 
+    _kind = "CMS"
+    _columns = ("row_j", "col_idx", "cnt")
+
     def __init__(self, path: str, item_col: str, ts_col: str = "ts",
                  bucket: str = "1 hour", width: int = 1 << 12,
                  depth: int = 3, weight_col: str | None = None,
                  lateness: int = 0):
-        self.path = path
+        super().__init__(path, ts_col, bucket, lateness)
         self.item_col = item_col
-        self.ts_col = ts_col
-        self.bucket = bucket
         self.width = int(width)
         self.depth = int(depth)
         self.weight_col = weight_col
-        self.lateness = int(lateness)
 
     def _summarize(self, events: DataFrame) -> DataFrame:
         bucketed = events.withColumn(
             "bucket_start", F.window(self.ts_col, self.bucket)["start"])
         return cms_build(bucketed, self.item_col, width=self.width,
                          depth=self.depth, weight_col=self.weight_col,
-                         group_cols=("bucket_start",)) \
-            .repartition("bucket_start")
-
-    def read(self, spark) -> DataFrame:
-        if not ContinuousRollup(self.path, self.ts_col,
-                                self.bucket)._exists(spark):
-            raise ValueError(
-                f"no stored CMS state at {self.path} — refresh() "
-                "with a non-empty source first")
-        return (spark.read.parquet(self.path)
-                .select(F.col("bucket_start").cast("timestamp"),
-                        "row_j", "col_idx", "cnt"))
-
-    def maintain(self, spark, max_files: int = 64,
-                 target_file_bytes: int = 128 * 1024 * 1024) -> dict:
-        """Compact fragmented sketch state — see
-        :meth:`ContinuousRollup.maintain` (same layout, same
-        contract)."""
-        from ..functions.maintenance import compact_if_fragmented
-        return compact_if_fragmented(
-            spark, self.path, max_files=max_files,
-            target_file_bytes=target_file_bytes,
-            partition_by=["bucket_start"])
-
-    def refresh(self, events: DataFrame) -> DataFrame:
-        spark = events.sparkSession
-        probe = ContinuousRollup(self.path, self.ts_col, self.bucket)
-        if not probe._exists(spark):
-            out = self._summarize(events)
-            (out.write.mode("overwrite")
-             .partitionBy("bucket_start").parquet(self.path))
-            spark.catalog.refreshByPath(self.path)
-            if not probe._exists(spark):
-                return spark.createDataFrame([], out.schema)
-            return self.read(spark)
-        high = (self.read(spark)
-                .agg(F.max("bucket_start").alias("m")).first()["m"])
-        import datetime as dt
-        secs = probe._bucket_seconds(spark)
-        floor = high - dt.timedelta(seconds=secs * self.lateness)
-        fresh = self._summarize(
-            events.where(F.col(self.ts_col) >= F.lit(floor)))
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                       "dynamic")
-        try:
-            (fresh.write.mode("overwrite").partitionBy("bucket_start")
-             .parquet(self.path))
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev)
-        spark.catalog.refreshByPath(self.path)
-        return self.read(spark)
+                         group_cols=("bucket_start",))
 
     def serve(self, spark, bucket: str | None = None) -> DataFrame:
         """The stored sketch: global (bucket=None — one sketch for
         the whole history), or per coarser-grain bucket.
-        Finer/misaligned grains are refused (the same
-        silently-wrong-serve guard as the sibling families)."""
-        s = self.read(spark)
-        if bucket is None:
-            return cms_merge(s)
-        probe = ContinuousRollup(self.path, self.ts_col, self.bucket)
-        stored_s = probe._bucket_seconds(spark)
-        req_s = ContinuousRollup(self.path, self.ts_col,
-                                 bucket)._bucket_seconds(spark)
-        if req_s < stored_s or req_s % stored_s:
-            raise ValueError(
-                f"serve bucket {bucket!r} ({req_s}s) must be a whole "
-                f"multiple of the stored bucket {self.bucket!r} "
-                f"({stored_s}s)")
-        rebucketed = s.withColumn(
-            "bucket_start", F.window("bucket_start", bucket)["start"])
-        return cms_merge(rebucketed, group_cols=("bucket_start",))
+        Finer/misaligned grains are refused."""
+        s, by = self._at_grain(spark, bucket)
+        return cms_merge(s, group_cols=by)
 
     def estimate(self, df: DataFrame, item_col: str,
                  out_col: str = "est_count") -> DataFrame:

@@ -14,6 +14,8 @@ pandas interchange for the Pandas-UDF operators), UTC session timezone
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -101,8 +103,8 @@ ENGINE_CONF: dict[str, str] = {
     # small-data default: export PYDIN_SHUFFLE_CODEC=zstd on
     # deployments whose shuffles are GB-per-stage and up — at 100 TB
     # the halved network/disk bytes dominate the compression tax.
-    "spark.io.compression.codec":
-        os.environ.get("PYDIN_SHUFFLE_CODEC", "lz4"),
+    # get_session reads and validates the env var on every call.
+    "spark.io.compression.codec": "lz4",
     "spark.executorEnv.OPENBLAS_NUM_THREADS": "1",
     "spark.executorEnv.OMP_NUM_THREADS": "1",
     "spark.executorEnv.MKL_NUM_THREADS": "1",
@@ -138,6 +140,21 @@ def _local_driver_memory() -> str | None:
     return f"{min(half_mb, 8192)}m"
 
 
+#: codecs Spark accepts for ``spark.io.compression.codec``
+_SHUFFLE_CODECS = ("lz4", "zstd", "snappy", "lzf")
+
+
+def _shuffle_codec() -> str:
+    """``$PYDIN_SHUFFLE_CODEC`` (default: the ENGINE_CONF codec),
+    rejected up front when Spark would not accept it."""
+    codec = os.environ.get("PYDIN_SHUFFLE_CODEC",
+                           ENGINE_CONF["spark.io.compression.codec"])
+    if codec not in _SHUFFLE_CODECS:
+        raise ValueError(f"PYDIN_SHUFFLE_CODEC={codec!r} is not one of "
+                         f"{', '.join(_SHUFFLE_CODECS)}")
+    return codec
+
+
 def get_session(app_name: str = "pydin-spark", master: str | None = None,
                 extra_conf: dict[str, str] | None = None) -> SparkSession:
     """Build (or reuse) the engine SparkSession.
@@ -146,6 +163,8 @@ def get_session(app_name: str = "pydin-spark", master: str | None = None,
     manager is configured; on a real cluster, leave ``master`` unset in
     the environment-provided config and spark-submit decides.
     """
+    conf = dict(ENGINE_CONF)
+    conf["spark.io.compression.codec"] = _shuffle_codec()
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     # cap BLAS threads BEFORE any python worker can spawn (local-mode
     # workers inherit this process's env); a user-exported value wins
@@ -154,7 +173,6 @@ def get_session(app_name: str = "pydin-spark", master: str | None = None,
     builder = SparkSession.builder.appName(app_name)
     resolved_master = master or f"local[{cpus}]"
     builder = builder.master(resolved_master)
-    conf = dict(ENGINE_CONF)
     if resolved_master.startswith("local"):
         mem = _local_driver_memory()
         if mem is not None:
@@ -165,3 +183,35 @@ def get_session(app_name: str = "pydin-spark", master: str | None = None,
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+#: serializes every :func:`scoped_conf` block in the process
+_CONF_LOCK = threading.RLock()
+
+
+@contextmanager
+def scoped_conf(spark, **kv):
+    """Set session confs ``kv`` for the block, then restore each to its
+    previous value (unset when it had none).
+
+    Session confs are global to every thread sharing ``spark`` (the
+    scheduler runs jobs on threads over one session), so the whole
+    block holds one process-wide re-entrant lock: two overlapping
+    save/set/restore sequences could otherwise interleave and leave
+    the first block's value behind. Other threads' queries still see
+    the scoped values while the block runs — use a per-write option
+    instead wherever Spark offers one. Keys contain dots, so pass them
+    as ``**{"spark.sql.adaptive.enabled": "false"}``.
+    """
+    with _CONF_LOCK:
+        saved = {k: spark.conf.get(k, None) for k in kv}
+        try:
+            for k, v in kv.items():
+                spark.conf.set(k, v)
+            yield
+        finally:
+            for k, v in saved.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)

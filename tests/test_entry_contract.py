@@ -73,19 +73,16 @@ def test_column_names_match_oracles(spark, sf_dir, duck):
         finally:
             cur.close()
 
-    # Pre-register the fixture views ONCE, serially: the first
-    # register_tables call toggles a session conf inside load_table,
-    # and 8 racing first-callers could mis-restore it.
+    # Pre-register the fixture views ONCE, serially, so the pool
+    # threads never race on the first registration.
     from pydin_spark import register_tables
     register_tables(spark, sf_dir)
-    # Some constructors toggle SESSION confs with save/restore
-    # (graph iteration flips adaptive.enabled around its eager
-    # checkpoints, the stored builders flip partitionOverwriteMode).
-    # Two pool threads interleaving on the same conf can "restore"
-    # the other thread's mid-toggle value and leak it into the shared
-    # session — the exact flake that broke a later AQE plan-shape
-    # test. The column-name assertion is insensitive to these confs,
-    # so snapshot and restore them around the pool.
+    # Graph iteration turns adaptive.enabled off around its eager
+    # checkpoints (session.scoped_conf: locked, so overlapping blocks
+    # cannot mis-restore each other, but the value is session-global
+    # while a block runs). The column-name assertion is insensitive
+    # to these confs; snapshot and restore them around the pool so
+    # nothing can leak into a later AQE plan-shape test.
     leaky = ["spark.sql.adaptive.enabled",
              "spark.sql.sources.partitionOverwriteMode",
              "spark.sql.legacy.parquet.nanosAsLong"]

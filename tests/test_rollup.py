@@ -4,7 +4,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from pydin_spark import load_table
-from pydin_spark.operators.rollup import ContinuousRollup, rollup_aggregate
+from pydin_spark.operators.rollup import (ContinuousRollup, StoredBloom,
+                                          StoredCMS, StoredHeavyHitters,
+                                          rollup_aggregate)
 
 
 @pytest.fixture(scope="module")
@@ -383,18 +385,40 @@ def test_stored_hh_lateness_window(spark, tmp_path_factory):
     assert out[("2024-01-01 11:00:00", "u2")] == 1
 
 
-def test_stored_hh_serve_refuses_finer_grain(spark, events,
-                                             tmp_path_factory):
+@pytest.mark.parametrize("family", [StoredHeavyHitters, StoredBloom,
+                                    StoredCMS], ids=lambda c: c.__name__)
+def test_stored_serve_refuses_finer_grain(spark, events, family,
+                                          tmp_path_factory):
     """Serving at a finer or misaligned grain than the stored bucket
-    would silently misattribute counts — it must raise instead."""
-    import pytest
-    from pydin_spark.operators.rollup import StoredHeavyHitters
-    path = str(tmp_path_factory.mktemp("hh_state") / "daily")
-    st = StoredHeavyHitters(path, "user_id", bucket="1 day")
+    would silently misattribute state — it must raise instead."""
+    path = str(tmp_path_factory.mktemp("stored") / "daily")
+    st = family(path, "user_id", bucket="1 day")
     st.refresh(events)
     with pytest.raises(ValueError, match="whole multiple"):
-        st.serve(spark, k=5, bucket="1 hour")
+        st.serve(spark, bucket="1 hour")
     with pytest.raises(ValueError, match="whole multiple"):
-        st.serve(spark, k=5, bucket="90 minutes")
+        st.serve(spark, bucket="90 minutes")
     # an aligned coarser grain still serves
-    assert st.serve(spark, k=5, bucket="2 days").count() > 0
+    assert st.serve(spark, bucket="2 days").count() > 0
+
+
+@pytest.mark.parametrize("family", [ContinuousRollup, StoredHeavyHitters,
+                                    StoredBloom, StoredCMS],
+                         ids=lambda c: c.__name__)
+def test_stored_empty_first_build(spark, family, tmp_path):
+    """An empty source stores nothing: refresh returns a typed empty
+    frame shaped like the state, read refuses actionably, and the next
+    non-empty refresh is the first build."""
+    mk = lambda rows: spark.createDataFrame(
+        rows, "ts string, user_id string, event_type string, "
+              "value double"
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    kw = {} if family is ContinuousRollup else {"item_col": "user_id"}
+    st = family(str(tmp_path / "state"), bucket="1 hour", **kw)
+    empty = st.refresh(mk([]))
+    assert empty.count() == 0
+    with pytest.raises(ValueError, match="refresh"):
+        st.read(spark)
+    built = st.refresh(mk([("2024-01-01 10:15:00", "u1", "click", 1.0)]))
+    assert built.count() > 0
+    assert empty.schema.names == built.schema.names

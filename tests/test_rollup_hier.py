@@ -82,6 +82,9 @@ def test_hier_equals_rollup_null_group_values(spark):
 
 
 def test_hier_equals_rollup_empty_and_single(spark):
-    # ROLLUP over empty input emits exactly the grand-total row
+    # Spark's Expand-based ROLLUP emits NO rows on empty input (not
+    # even the grand total), and the rewrite must match that; DuckDB
+    # emits one (NULL, NULL, 0, 0) row — see q_rollup_status in
+    # __spark_entry__.py
     _check(spark, [])
     _check(spark, [("A", "F", 7)])
