@@ -645,34 +645,11 @@ def icws_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     sig = icws_signatures(df, id_col, text_col, n, num_hashes,
                           max_shingle_freq, weight_scale,
                           weighted_postings=wp)
-    rows_per_band = num_hashes // bands
-    band_cols = [
-        F.struct(F.lit(b).alias("band"),
-                 F.xxhash64(*[f
-                              for r in range(rows_per_band)
-                              for f in (
-                                  F.element_at(
-                                      "sig",
-                                      b * rows_per_band + r + 1)["sh"],
-                                  F.element_at(
-                                      "sig",
-                                      b * rows_per_band + r + 1)["t"])])
-                 .alias("bh"))
-        for b in range(bands)
-    ]
-    # band array staged in a Project before the explode — same
-    # interpreted-Generate rationale as :func:`_band_buckets`
-    buckets = (sig.select(F.col(id_col),
-                          F.array(*band_cols).alias("__bk_arr"))
-               .select(F.col(id_col), F.explode("__bk_arr").alias("bk"))
-               .select(F.col(id_col), F.col("bk.band"),
-                       F.col("bk.bh")))
-    buckets = _cap_buckets(buckets, max_bucket_size, shed_stats)
-    a = buckets.select(F.col(id_col).alias("id_a"), "band", "bh")
-    b = buckets.select(F.col(id_col).alias("id_b"), "band", "bh")
-    cand = (a.join(b, ["band", "bh"])
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b").distinct())
+    # xxhash64 of a (sh, t) struct element chains its fields exactly
+    # as xxhash64(sh, t) does, so the shared banding applies as-is
+    cand = _bucket_pairs(_band_buckets(sig, id_col, num_hashes, bands),
+                         id_col, max_bucket_size, shed_stats,
+                         owned_frames)
     if not verify:
         return cand
     # candidate-bounded exact verify: the SAME integer arithmetic as
@@ -733,7 +710,8 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
 def _band_buckets(sig: DataFrame, id_col: str, num_hashes: int,
                   bands: int) -> DataFrame:
     """(id, band, bh) bucket rows from a signature frame: each band's
-    rows hashed to one 8-byte bucket key."""
+    rows hashed to one 8-byte bucket key. Signature elements may be
+    longs (MinHash) or structs (ICWS's (sh, t) samples)."""
     rows_per_band = num_hashes // bands
     band_cols = [
         F.struct(F.lit(b).alias("band"),
@@ -750,6 +728,63 @@ def _band_buckets(sig: DataFrame, id_col: str, num_hashes: int,
                        F.array(*band_cols).alias("__bk_arr"))
             .select(F.col(id_col), F.explode("__bk_arr").alias("bk"))
             .select(F.col(id_col), F.col("bk.band"), F.col("bk.bh")))
+
+
+def _bucket_pairs(buckets: DataFrame, id_col: str,
+                  max_bucket_size: int | None = None,
+                  shed_stats: dict | None = None,
+                  owned_frames: list | None = None) -> DataFrame:
+    """Candidate-pair stage of the banded enumerators (MinHash, ICWS,
+    SimHash), the bucket analogue of :func:`_shared_shingle_pairs`:
+    the (band, bh) self-join of a persisted bucket frame, keeping
+    id_a < id_b. Other columns of ``buckets`` ride through as
+    ``<col>_a`` / ``<col>_b``. ``owned_frames`` receives the persist.
+
+    ``max_bucket_size`` drops every bucket of more than the cap before
+    the join, the bucket analogue of ``max_shingle_freq``: a slab of
+    near-identical boilerplate collapses whole bands to one hash, and
+    one bucket of b docs yields O(b²) candidates. Only pairs whose
+    EVERY colliding band is oversized are lost — at production caps
+    (1k-10k), the boilerplate an :func:`exact_dedup` pre-pass removes.
+    The window count costs its own shuffle (600 docs, cold: 14 stages
+    against 12 uncapped). Singleton buckets (only the excluded
+    self-pair) go with it; the uncapped path keeps them.
+    ``shed_stats`` (a dict) receives ``{"shed_buckets", "shed_rows"}``
+    from one extra aggregate job."""
+    if max_bucket_size is not None:
+        if max_bucket_size < 2:
+            raise ValueError("max_bucket_size must be >= 2 (a bucket "
+                             "of 1 yields no pairs)")
+        from pyspark.sql import Window
+        sized = buckets.withColumn(
+            "__bsz",
+            F.count(F.lit(1)).over(Window.partitionBy("band", "bh")))
+        if shed_stats is not None:
+            over = (sized.where(F.col("__bsz") > max_bucket_size)
+                    .agg(F.count_distinct("band", "bh")
+                         .alias("shed_buckets"),
+                         F.count(F.lit(1)).alias("shed_rows")).first())
+            shed_stats["shed_buckets"] = int(over["shed_buckets"])
+            shed_stats["shed_rows"] = int(over["shed_rows"])
+        buckets = sized.where((F.col("__bsz") >= 2)
+                              & (F.col("__bsz") <= max_bucket_size)) \
+            .drop("__bsz")
+    buckets = buckets.persist()
+    if owned_frames is not None:
+        owned_frames.append(buckets)
+    carried = [c for c in buckets.columns
+               if c not in (id_col, "band", "bh")]
+
+    def side(s):
+        return buckets.select(
+            F.col(id_col).alias(f"id_{s}"), "band", "bh",
+            *[F.col(c).alias(f"{c}_{s}") for c in carried])
+
+    return (side("a").join(side("b"), ["band", "bh"])
+            .where(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b", *[f"{c}_{s}" for s in "ab"
+                                      for c in carried])
+            .distinct())
 
 
 def lsh_plan(threshold: float, num_hashes: int = 64) -> dict:
@@ -796,54 +831,6 @@ def lsh_plan(threshold: float, num_hashes: int = 64) -> dict:
             "p_at_threshold": p_at, "curve": curve}
 
 
-def _cap_buckets(buckets: DataFrame, max_bucket_size: int | None,
-                 shed_stats: dict | None = None) -> DataFrame:
-    """Per-bucket candidate cap shared by the banded-LSH enumerators
-    (:func:`minhash_lsh_pairs`, :func:`icws_lsh_pairs`): drop every
-    (band, bh) bucket holding more than ``max_bucket_size`` docs
-    BEFORE the self-join — the bucket analogue of
-    ``max_shingle_freq`` (:func:`_capped_posting_lists`), closing the
-    one degenerate input the banding itself can't: a corpus slab of
-    near-identical boilerplate collapses whole bands to one hash and
-    a single bucket of b docs yields O(b²) candidates.
-
-    Shedding an oversized bucket only loses pairs whose EVERY
-    colliding band is oversized — at production caps (1k-10k) that is
-    precisely the all-identical boilerplate a cheaper
-    :func:`exact_dedup` pre-pass removes, the standard skip-hot-
-    buckets LSH discipline. The window count is a shuffle on the SAME
-    (band, bh) key the self-join pays anyway, so the cap adds no new
-    exchange. ``shed_stats`` (a dict) receives
-    ``{"shed_buckets": n, "shed_rows": m}`` — one tiny extra
-    aggregate job, skipped when the caller doesn't ask."""
-    if max_bucket_size is None:
-        return buckets
-    if max_bucket_size < 2:
-        raise ValueError("max_bucket_size must be >= 2 (a bucket of "
-                         "1 yields no pairs)")
-    from pyspark.sql import Window
-    w = Window.partitionBy("band", "bh")
-    sized = buckets.withColumn("__bsz", F.count(F.lit(1)).over(w))
-    if shed_stats is not None:
-        over = (sized.where(F.col("__bsz") > max_bucket_size)
-                .agg(F.count_distinct("band", "bh")
-                     .alias("shed_buckets"),
-                     F.count(F.lit(1)).alias("shed_rows")).first())
-        shed_stats["shed_buckets"] = int(over["shed_buckets"])
-        shed_stats["shed_rows"] = int(over["shed_rows"])
-    # a singleton bucket yields only the self-pair the enumerators
-    # exclude, so its rows are dead weight in the self-join — the
-    # bucket analogue of :func:`_pairable_postings` (round-11,
-    # output-identical). Capped path only: the count is already on
-    # every row here, so when a cap is set this sheds the BULK of the
-    # join input (on a real corpus most buckets hold one doc) for one
-    # extra codegen'd comparison; the uncapped path returns above and
-    # keeps its singletons.
-    return sized.where((F.col("__bsz") >= 2)
-                       & (F.col("__bsz") <= max_bucket_size)) \
-        .drop("__bsz")
-
-
 def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text", n: int = 3,
                       num_hashes: int = 64, bands: int = 16,
@@ -869,7 +856,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     lifetime.
 
     ``max_bucket_size`` bounds the worst bucket's candidate fan-out to
-    O(cap²) (see :func:`_cap_buckets`); default None = exact banding
+    O(cap²) (see :func:`_bucket_pairs`); default None = exact banding
     semantics. At corpus scale run :func:`exact_dedup` first, then a
     cap of ~1000 — pair counts stay output-bound instead of
     boilerplate-bound.
@@ -881,17 +868,9 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
             owned_frames.append(shingles)
     sig = minhash_signatures(df, id_col, text_col, n, num_hashes,
                              shingles=shingles)
-    buckets = _cap_buckets(
-        _band_buckets(sig, id_col, num_hashes, bands),
-        max_bucket_size, shed_stats) \
-        .persist()  # both sides of the bucket self-join reuse this
-    if owned_frames is not None:
-        owned_frames.append(buckets)
-    left = buckets.select(F.col(id_col).alias("id_a"), "band", "bh")
-    right = buckets.select(F.col(id_col).alias("id_b"), "band", "bh")
-    candidates = (left.join(right, ["band", "bh"])
-                  .where(F.col("id_a") < F.col("id_b"))
-                  .select("id_a", "id_b").distinct())
+    candidates = _bucket_pairs(
+        _band_buckets(sig, id_col, num_hashes, bands), id_col,
+        max_bucket_size, shed_stats, owned_frames)
     if not verify:
         return candidates
     return (jaccard_for_pairs(candidates, df, id_col, text_col, n,
@@ -1258,34 +1237,25 @@ def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
     Banding: split the signature into 4×16-bit chunks; by pigeonhole
     any pair within hamming distance 3·k shares a chunk — join on chunk
     equality, then verify the exact hamming distance. Avoids O(n²).
-    ``owned_frames`` (a list) collects the persisted signature frame so
-    a long-lived caller can unpersist it once the result is
+    ``owned_frames`` (a list) collects the persisted chunk-bucket frame
+    (it carries the signature, so the signature aggregate runs once)
+    so a long-lived caller can unpersist it once the result is
     materialized (ADVICE r10).
     """
-    # the signature aggregate (token explode + 64 bit-position sums)
-    # feeds both sides of the chunk-bucket self-join below — persist
-    # so it runs once, not once per alias (round-10).
-    sig = simhash(df, id_col, text_col, hash_fn).persist()
-    if owned_frames is not None:
-        owned_frames.append(sig)
     chunks = F.array(*[
-        F.struct(F.lit(c).alias("chunk"),
+        F.struct(F.lit(c).alias("band"),
                  F.shiftrightunsigned(F.col("simhash"), c * 16)
-                 .bitwiseAND(F.lit(0xFFFF)).alias("ck"))
+                 .bitwiseAND(F.lit(0xFFFF)).alias("bh"))
         for c in range(4)
     ])
-    buckets = (sig.select(F.col(id_col), F.col("simhash"),
-                          F.explode(chunks).alias("b"))
+    buckets = (simhash(df, id_col, text_col, hash_fn)
+               .select(F.col(id_col), F.col("simhash"),
+                       F.explode(chunks).alias("b"))
                .select(F.col(id_col), "simhash",
-                       F.col("b.chunk"), F.col("b.ck")))
-    left = buckets.select(F.col(id_col).alias("id_a"),
-                          F.col("simhash").alias("sh_a"), "chunk", "ck")
-    right = buckets.select(F.col(id_col).alias("id_b"),
-                           F.col("simhash").alias("sh_b"), "chunk", "ck")
-    pairs = (left.join(right, ["chunk", "ck"])
-             .where(F.col("id_a") < F.col("id_b"))
-             .select("id_a", "id_b", "sh_a", "sh_b").distinct())
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+                       F.col("b.band"), F.col("b.bh")))
+    pairs = _bucket_pairs(buckets, id_col, owned_frames=owned_frames)
+    hamming = F.bit_count(F.col("simhash_a")
+                          .bitwiseXOR(F.col("simhash_b")))
     return (pairs.withColumn("hamming", hamming)
             .where(F.col("hamming") <= max_hamming)
             .select("id_a", "id_b", "hamming"))

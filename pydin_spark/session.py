@@ -20,8 +20,10 @@ from contextlib import contextmanager
 from pyspark.sql import SparkSession
 
 #: Config applied to every session this engine builds. Values hold at
-#: cluster scale too: AQE re-plans shuffle partition counts at runtime, so
-#: ``spark.sql.shuffle.partitions`` is only an upper bound pre-AQE.
+#: cluster scale too. :func:`get_session` adds the env-driven entries:
+#: the codec and the two shuffle widths sized from ``SPARK_GRAFT_CPUS``
+#: (AQE re-plans partition counts at runtime, so
+#: ``spark.sql.shuffle.partitions`` is only an upper bound pre-AQE).
 ENGINE_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -31,19 +33,6 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.parquet.filterPushdown": "true",
     # Broadcast joins for dimension tables (region/nation/… at any SF).
     "spark.sql.autoBroadcastJoinThreshold": "64m",
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
-    # Let AQE size each shuffle from the DATA, not a fixed number: it
-    # coalesces down from this initial width per-stage, so light
-    # shuffles still land at ~core-count partitions while heavy ones
-    # (Expand x distinct aggregates, wide joins) keep enough reducers
-    # that per-task hash state fits in memory instead of spilling.
-    # Measured on COUNT(DISTINCT) ROLLUP at the 100x tier: 32 fixed
-    # reducers spill and swing 15-80 s run-to-run; 8x initial width
-    # is stable at a fraction of that (ROUND8_NOTES). This is the
-    # standard cluster discipline — initial width >> cores, AQE
-    # owns the runtime number.
-    "spark.sql.adaptive.coalescePartitions.initialPartitionNum":
-        str(8 * int(os.environ.get("SPARK_GRAFT_CPUS", "32"))),
     # never wait for data locality: the 3 s default stalls any task
     # whose preferred location can't be satisfied — measured as a flat
     # +3.4 s on every coalesce(1) metadata write in local mode, where
@@ -155,17 +144,43 @@ def _shuffle_codec() -> str:
     return codec
 
 
+def _cpus() -> int:
+    """``$SPARK_GRAFT_CPUS`` (default 32): the local master's core
+    count and the shuffle width, rejected up front unless a positive
+    integer."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    if not raw.strip().isdecimal() or int(raw) < 1:
+        raise ValueError(f"SPARK_GRAFT_CPUS={raw!r} is not a positive "
+                         "integer")
+    return int(raw)
+
+
 def get_session(app_name: str = "pydin-spark", master: str | None = None,
                 extra_conf: dict[str, str] | None = None) -> SparkSession:
     """Build (or reuse) the engine SparkSession.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` when no cluster
     manager is configured; on a real cluster, leave ``master`` unset in
-    the environment-provided config and spark-submit decides.
+    the environment-provided config and spark-submit decides. The env
+    knobs are read and validated on each call, before the builder is
+    touched.
     """
+    cpus = _cpus()
     conf = dict(ENGINE_CONF)
     conf["spark.io.compression.codec"] = _shuffle_codec()
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    conf["spark.sql.shuffle.partitions"] = str(cpus)
+    # Let AQE size each shuffle from the DATA, not a fixed number: it
+    # coalesces down from this initial width per-stage, so light
+    # shuffles still land at ~core-count partitions while heavy ones
+    # (Expand x distinct aggregates, wide joins) keep enough reducers
+    # that per-task hash state fits in memory instead of spilling.
+    # Measured on COUNT(DISTINCT) ROLLUP at the 100x tier: 32 fixed
+    # reducers spill and swing 15-80 s run-to-run; 8x initial width
+    # is stable at a fraction of that (ROUND8_NOTES). This is the
+    # standard cluster discipline — initial width >> cores, AQE
+    # owns the runtime number.
+    conf["spark.sql.adaptive.coalescePartitions.initialPartitionNum"] = \
+        str(8 * cpus)
     # cap BLAS threads BEFORE any python worker can spawn (local-mode
     # workers inherit this process's env); a user-exported value wins
     for var in _BLAS_THREAD_ENV:

@@ -1,90 +1,11 @@
-"""Round-10 additions: per-bucket candidate caps for the banded-LSH
-pair enumerators (VERDICT r7 item 2) — the bucket analogue of
-``max_shingle_freq``. A corpus slab of identical boilerplate collapses
-whole bands into one bucket; without a cap that single bucket yields
-O(b²) candidate pairs. With the cap the run completes, the shed is
-counted, and genuinely-distinct near-dup pairs still surface."""
+"""Round-10 additions not yet regrouped by family: quality-argmax
+survivor selection, the StatsIndex stored family, and the CMS-capped
+Jaccard tier. The per-bucket LSH cap tests live in
+``tests/test_dedup_lsh.py``."""
 
 import pytest
-from pyspark.sql import functions as F
 
-from pydin_spark.operators.dedup import icws_lsh_pairs, minhash_lsh_pairs
-
-
-def _bomb(spark, n_bomb=10_000):
-    """n_bomb identical boilerplate docs + three genuine near-dup
-    pairs of distinct prose (ids 1000000+)."""
-    bomb = spark.range(n_bomb).select(
-        F.col("id").alias("doc_id"),
-        F.lit("the same legal boilerplate footer repeated on every "
-              "page of the crawl again and again").alias("text"))
-    pairs = spark.createDataFrame(
-        [(1_000_000, "alpha beta gamma delta epsilon zeta eta theta "
-                     "iota kappa"),
-         (1_000_001, "alpha beta gamma delta epsilon zeta eta theta "
-                     "iota lambda"),
-         (1_000_002, "one two three four five six seven eight nine "
-                     "ten eleven"),
-         (1_000_003, "one two three four five six seven eight nine "
-                     "ten twelve"),
-         (1_000_004, "red orange yellow green blue indigo violet "
-                     "cyan magenta white"),
-         (1_000_005, "red orange yellow green blue indigo violet "
-                     "cyan magenta black")],
-        "doc_id long, text string")
-    return bomb.unionByName(pairs)
-
-
-def test_minhash_bucket_cap_survives_boilerplate_bomb(spark):
-    docs = _bomb(spark)
-    shed = {}
-    got = minhash_lsh_pairs(docs, threshold=0.5, max_bucket_size=50,
-                            shed_stats=shed)
-    rows = got.collect()
-    # the bomb is fully shed (every one of its buckets holds 10k docs)
-    assert shed["shed_buckets"] >= 1
-    assert shed["shed_rows"] >= 10_000
-    found = {(r["id_a"], r["id_b"]) for r in rows}
-    assert {(1_000_000, 1_000_001), (1_000_002, 1_000_003),
-            (1_000_004, 1_000_005)} <= found
-    # nothing from the bomb slab survives into the pair set
-    assert all(a >= 1_000_000 for a, _ in found)
-    # candidate fan-out is bounded by the cap, not the slab size
-    n_cand = minhash_lsh_pairs(docs, verify=False,
-                               max_bucket_size=50).count()
-    assert n_cand <= 16 * 50 * 50  # bands * cap^2 hard ceiling
-    assert n_cand < 100  # and in practice just the genuine pairs
-
-
-def test_minhash_cap_noop_when_no_bucket_exceeds_it(spark):
-    docs = _bomb(spark, n_bomb=0)
-    uncapped = {tuple(r) for r in
-                minhash_lsh_pairs(docs, threshold=0.5).collect()}
-    shed = {}
-    capped = {tuple(r) for r in
-              minhash_lsh_pairs(docs, threshold=0.5,
-                                max_bucket_size=1000,
-                                shed_stats=shed).collect()}
-    assert capped == uncapped
-    assert shed == {"shed_buckets": 0, "shed_rows": 0}
-
-
-def test_icws_bucket_cap_survives_boilerplate_bomb(spark):
-    docs = _bomb(spark, n_bomb=2_000)
-    shed = {}
-    got = icws_lsh_pairs(docs, threshold=0.3, max_bucket_size=50,
-                         max_shingle_freq=None, shed_stats=shed)
-    found = {(r["id_a"], r["id_b"]) for r in got.collect()}
-    assert shed["shed_rows"] >= 2_000
-    assert {(1_000_000, 1_000_001), (1_000_002, 1_000_003),
-            (1_000_004, 1_000_005)} <= found
-    assert all(a >= 1_000_000 for a, _ in found)
-
-
-def test_bucket_cap_validates(spark):
-    docs = _bomb(spark, n_bomb=0)
-    with pytest.raises(ValueError, match="max_bucket_size"):
-        minhash_lsh_pairs(docs, max_bucket_size=1).count()
+from tests.test_dedup_lsh import _bomb
 
 
 def test_keep_best_survivor_quality_argmax(spark):

@@ -1,78 +1,11 @@
-"""Round-11 additions (VERDICT r8 #1): the flagship MinHash-LSH path
-runs with the production per-bucket cap ON (`dedup_minhash_capped`),
-and the shed is oracle-verified non-vacuously against a boilerplate
-slab (`dedup_minhash_shed`). These tests pin the two empirical facts
-those oracles rest on: the fixture corpora never approach the cap
-(so capped == uncapped == exact Jaccard), and the slab's vocabulary
-is disjoint from the corpus (so slab buckets hold exactly the slab
-and the shed removes precisely the slab pairs)."""
+"""Round-11 additions not yet regrouped by family: IVF assignment
+ties, the stdlib PNG decoder, fact-bucket sizing, the no-row-UDF
+package scan, z-order maintenance crash recovery, phrase joins and
+the shingle-spread estimate. The capped/shed MinHash-LSH fixture
+facts live in ``tests/test_dedup_lsh.py``."""
 
 import pytest
 from pyspark.sql import functions as F
-
-import __spark_entry__ as entrymod
-from pydin_spark.operators import dedup
-
-
-def test_fixture_buckets_far_below_cap(spark, views):
-    """The dedup_minhash_capped oracle (exact Jaccard, i.e. the
-    uncapped result) is valid because no fixture bucket comes within
-    two orders of magnitude of the 1000-doc cap."""
-    docs = spark.table("documents")
-    sig = dedup.minhash_signatures(docs, num_hashes=32)
-    buckets = dedup._band_buckets(sig, "doc_id", 32, 8)
-    top = (buckets.groupBy("band", "bh").count()
-           .agg(F.max("count")).first()[0])
-    assert top < 1000, f"fixture bucket of {top} invalidates the oracle"
-    assert top < 100  # two orders of margin in practice
-
-
-def test_capped_equals_uncapped_on_fixture(spark, views, sf_dir):
-    plain = entrymod.queries()["dedup_minhash_lsh"](spark, sf_dir)
-    capped = entrymod.queries()["dedup_minhash_capped"](spark, sf_dir)
-    assert sorted(map(tuple, plain.collect())) \
-        == sorted(map(tuple, capped.collect()))
-
-
-def test_slab_vocabulary_disjoint(spark, views):
-    """No corpus token collides with the slab's zq<i> vocabulary, so
-    slab buckets hold exactly the 150 slab docs."""
-    hits = (spark.table("documents")
-            .where(F.col("text").rlike(r"\bzq[0-9]+\b")).count())
-    assert hits == 0
-
-
-def test_shed_drops_exactly_the_slab(spark, views, sf_dir):
-    """dedup_minhash_shed == the uncapped corpus pair set: every
-    slab-internal pair is shed (all 8 of its band buckets hold 150 >
-    cap=100 docs), cross pairs share no shingles, corpus pairs are
-    untouched. shed_stats confirms the mechanism: exactly the slab's
-    8 buckets, 150 rows each, were dropped."""
-    corpus_pairs = sorted(
-        map(tuple, entrymod.queries()["dedup_minhash_lsh"](
-            spark, sf_dir).collect()))
-    shed_result = sorted(
-        map(tuple, entrymod.queries()["dedup_minhash_shed"](
-            spark, sf_dir).collect()))
-    assert shed_result == corpus_pairs
-
-    docs = spark.table("documents").select("doc_id", "text")
-    slab = (spark.range(entrymod._SLAB_N)
-            .select((F.lit(entrymod._SLAB_ID0) + F.col("id"))
-                    .alias("doc_id"),
-                    F.lit(entrymod._SLAB_TEXT).alias("text")))
-    stats: dict = {}
-    dedup.minhash_lsh_pairs(docs.unionByName(slab), threshold=0.9,
-                            num_hashes=32, bands=8,
-                            max_bucket_size=100,
-                            shed_stats=stats).count()
-    assert stats["shed_buckets"] == 8
-    assert stats["shed_rows"] == 8 * entrymod._SLAB_N
-
-
-def test_capped_entry_is_in_bench_headline():
-    import bench
-    assert "dedup_minhash_capped" in bench.HEADLINE
 
 
 def test_nearest_ids_tie_contract():

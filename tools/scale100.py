@@ -143,7 +143,7 @@ def _bomb_documents(spark, sf_dir):
 
 
 def _h_minhash_capped_bomb(spark, sf_dir):
-    """The flagship CAPPED operating point (dedup.py `_cap_buckets`)
+    """The flagship CAPPED operating point (dedup.py `_bucket_pairs`)
     at two decades of the duplicate-heavy corpus — the one leg of the
     100 TB dedup claim whose scale rows stopped at 10x (VERDICT r9
     #1). The per-bucket cap must shed the slab for the measured
