@@ -485,6 +485,10 @@ def read_skipping(spark: SparkSession, path: str, stats: DataFrame,
     return df
 
 
+_STATS_LOG_SCHEMA = ("batch string, seq long, cols_json string, "
+                     "dataset_path string")
+
+
 class StatsIndex:
     """File-stats skipping index as a stored-state family (ROADMAP
     item 29): the per-file min/max frame :func:`file_stats` computes
@@ -494,7 +498,7 @@ class StatsIndex:
     the expensive part, and it belongs to the (rare) layout job, not
     to every query session.
 
-    Family discipline (shared with the other ten stored families via
+    Family discipline (shared with every stored family via
     :mod:`pydin_spark.operators.stored`): each :meth:`rebuild` lands a
     ``data_{seq}_{batch}/`` stats frame first, then ONE commit row —
     a crashed collector stays invisible; readers resolve the newest
@@ -515,19 +519,9 @@ class StatsIndex:
         self.path = str(path).rstrip("/")
         self.cols = list(cols)
 
-    # -- state plumbing (the shared commit-log contract) ---------------
-
     def _newest(self, spark: SparkSession):
-        from ..operators.stored import has_commit_state
-        if not has_commit_state(spark, self.path):
-            return None
-        # deterministic newest under concurrent-writer seq ties
-        # (ADVICE r8): (seq, batch) descending — the family contract
-        # remains SINGLE-writer (one layout job owns the index); the
-        # tie-break only makes a violated contract reproducible
-        return (spark.read.parquet(f"{self.path}/commits")
-                .orderBy(F.col("seq").desc(), F.col("batch").desc())
-                .first())
+        from ..operators.stored import newest
+        return newest(spark, self.path)
 
     # -- API -----------------------------------------------------------
 
@@ -538,20 +532,16 @@ class StatsIndex:
         import json as _json
         import uuid as _uuid
 
-        from ..operators.stored import next_seq
+        from ..operators.stored import append_commit, next_seq
         batch = _uuid.uuid4().hex[:12]
         seq = next_seq(spark, self.path)
         frame = file_stats(spark, dataset_path, self.cols)
         loc = f"{self.path}/data_{seq}_{batch}"
         frame.repartition(1).write.mode("errorifexists").parquet(loc)
         n = spark.read.parquet(loc).count()
-        spark.createDataFrame(
-            [(batch, int(seq), _json.dumps(self.cols), dataset_path)],
-            "batch string, seq long, cols_json string, "
-            "dataset_path string") \
-            .repartition(1).write.mode("append") \
-            .parquet(f"{self.path}/commits")
-        spark.catalog.refreshByPath(f"{self.path}/commits")
+        append_commit(spark, self.path,
+                      (batch, seq, _json.dumps(self.cols), dataset_path),
+                      _STATS_LOG_SCHEMA)
         return {"seq": seq, "files_indexed": n}
 
     def read(self, spark: SparkSession) -> DataFrame:
@@ -581,32 +571,5 @@ class StatsIndex:
         """Collapse the commit log to the newest version and sweep
         unreferenced/crashed version dirs (log rewrite FIRST, same
         sequencing as every family). Hadoop-FS routed — any scheme."""
-        import uuid as _uuid
-
-        from .. import fs
-        row = self._newest(spark)
-        if row is None:
-            return {"kept": 0, "deleted": 0}
-        live = f"data_{row['seq']}_{row['batch']}"
-        tmp = f"{self.path}/commits_next_{_uuid.uuid4().hex[:8]}"
-        spark.createDataFrame(
-            [(row["batch"], int(row["seq"]), row["cols_json"],
-              row["dataset_path"])],
-            "batch string, seq long, cols_json string, "
-            "dataset_path string") \
-            .repartition(1).write.mode("overwrite").parquet(tmp)
-        # backup-rename swap, NOT delete-then-rename: a crash at any
-        # point leaves the old or the new log resolvable on disk, and
-        # readers self-heal through has_commit_state (ADVICE r8)
-        fs.replace_dir(spark, tmp, f"{self.path}/commits")
-        spark.catalog.refreshByPath(f"{self.path}/commits")
-        deleted = 0
-        for name in fs.listdir(spark, self.path):
-            stale_data = name.startswith("data_") and name != live
-            # crashed pre-swap temp logs are orphans too
-            stale_tmp = name.startswith("commits_next_")
-            if stale_data or stale_tmp:
-                fs.delete(spark, f"{self.path}/{name}",
-                          ignore_errors=True)
-                deleted += 1
-        return {"kept": 1, "deleted": deleted}
+        from ..operators.stored import collapse_to_newest
+        return collapse_to_newest(spark, self.path, _STATS_LOG_SCHEMA)

@@ -12,7 +12,7 @@ pattern of the reference (``pydin/models.py:939-1188`` Insert: stage
 into a schema table once, query it repeatedly), re-expressed as
 Spark's bucketed datasource tables.
 
-:class:`StoredBuckets` is the ninth stored-state family and keeps the
+:class:`StoredBuckets` is a stored-state family and keeps the
 family discipline (:mod:`pydin_spark.operators.stored`): every
 ``stage()`` lands a fresh ``data_{seq}_{batch}/`` directory, then ONE
 commit row LAST — a crashed writer's files stay invisible, and
@@ -37,11 +37,14 @@ import json
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from .. import fs
-from .stored import has_commit_state, next_seq
+from .stored import append_commit, collapse_to_newest, newest, next_seq
+
+# explicit commit schema: inference would widen buckets int -> bigint
+# and poison later appends
+_LOG_SCHEMA = ("batch string, seq long, key string, buckets int, "
+               "sorted boolean, schema_json string")
 
 
 class StoredBuckets:
@@ -74,35 +77,6 @@ class StoredBuckets:
         self.key = key
         self.buckets = int(buckets)
         self.sort = bool(sort)
-
-    # -- state plumbing ------------------------------------------------
-
-    def _has_state(self, spark: SparkSession) -> bool:
-        return has_commit_state(spark, self.path)
-
-    def _newest(self, spark: SparkSession):
-        """Newest committed version row, or None pre-state."""
-        if not self._has_state(spark):
-            return None
-        commits = spark.read.parquet(f"{self.path}/commits")
-        # (seq, batch) descending: deterministic under a violated
-        # single-writer contract (ADVICE r8 tie-break)
-        return commits.orderBy(F.col("seq").desc(),
-                               F.col("batch").desc()).first()
-
-    def _append_commit(self, spark: SparkSession, batch: str, seq: int,
-                       schema_json: str) -> None:
-        # family-extended commit schema (same written-LAST discipline
-        # as stored.append_commit; extra columns carry what attach()
-        # needs to rebuild the catalog DDL in a fresh session)
-        spark.createDataFrame(
-            [(batch, int(seq), self.key, self.buckets, self.sort,
-              schema_json)],
-            "batch string, seq long, key string, buckets int, "
-            "sorted boolean, schema_json string") \
-            .repartition(1).write.mode("append") \
-            .parquet(f"{self.path}/commits")
-        spark.catalog.refreshByPath(f"{self.path}/commits")
 
     # -- API -----------------------------------------------------------
 
@@ -138,7 +112,11 @@ class StoredBuckets:
         # the files stay) — the catalog is rebuilt by attach()
         writer.option("path", loc).saveAsTable(tmp)
         spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-        self._append_commit(spark, batch, seq, df.schema.json())
+        # extra columns carry what attach() needs to rebuild the
+        # catalog DDL in a fresh session
+        append_commit(spark, self.path,
+                      (batch, seq, self.key, self.buckets, self.sort,
+                       df.schema.json()), _LOG_SCHEMA)
         return seq
 
     def attach(self, spark: SparkSession, table: str) -> DataFrame:
@@ -147,7 +125,7 @@ class StoredBuckets:
         per session/query — re-attaching is how a fresh session (or a
         second cluster reading the same store) picks up staged state.
         """
-        row = self._newest(spark)
+        row = newest(spark, self.path)
         if row is None:
             raise ValueError(f"no committed bucketed state under "
                              f"{self.path}; stage() first")
@@ -174,30 +152,4 @@ class StoredBuckets:
         family's overwrite sequencing): a crash after it leaves
         orphan dirs that are invisible and swept by the next call —
         never a log pointing at deleted data. Returns counts."""
-        row = self._newest(spark)
-        if row is None:
-            return {"kept": 0, "deleted": 0}
-        live = f"data_{row['seq']}_{row['batch']}"
-        tmp = f"{self.path}/commits_next_{uuid.uuid4().hex[:8]}"
-        # rewrite with the EXPLICIT commit schema — inference would
-        # widen buckets int → bigint and poison later appends
-        spark.createDataFrame(
-            [(row["batch"], int(row["seq"]), row["key"],
-              int(row["buckets"]), bool(row["sorted"]),
-              row["schema_json"])],
-            "batch string, seq long, key string, buckets int, "
-            "sorted boolean, schema_json string") \
-            .repartition(1).write.mode("overwrite").parquet(tmp)
-        # backup-rename swap (ADVICE r8): the commits dir is never in
-        # a deleted-and-not-yet-replaced state; readers self-heal a
-        # crashed swap through has_commit_state
-        fs.replace_dir(spark, tmp, f"{self.path}/commits")
-        spark.catalog.refreshByPath(f"{self.path}/commits")
-        deleted = 0
-        for name in fs.listdir(spark, self.path):
-            if (name.startswith("data_") and name != live) \
-                    or name.startswith("commits_next_"):
-                fs.delete(spark, f"{self.path}/{name}",
-                          ignore_errors=True)
-                deleted += 1
-        return {"kept": 1, "deleted": deleted}
+        return collapse_to_newest(spark, self.path, _LOG_SCHEMA)

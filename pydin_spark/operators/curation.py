@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from . import dedup, text
+from .stored import CommitLog
 
 
 def _hash60(col, seed: int):
@@ -1492,20 +1493,20 @@ class StoredSnapshot:
     """Persisted corpus registry — :func:`snapshot_diff` for a
     refreshing corpus: register a snapshot once, then diff every
     recrawl against STORED fingerprints without rereading the old
-    corpus. The eighth member of the stored-state family
+    corpus. A member of the stored-state family
     (:func:`~pydin_spark.functions.maintenance.maintain_states`
-    contract, the commit-log discipline of
-    :class:`~pydin_spark.operators.text.StoredBigramLM`).
+    contract, the commit log of
+    :class:`~pydin_spark.operators.stored.CommitLog`).
 
-    State under ``path``: ``fps/`` — (id, fingerprint, batch, seq)
+    State under ``path``: ``fps/`` — (id, fingerprint, batch)
     APPEND-only rows; a document's CURRENT fingerprint is the row
-    from its newest committed batch (``max_by(fp, seq)``), a NULL
-    fingerprint is a tombstone (the doc left the corpus); ``commits/``
-    — (batch, seq), one row per committed apply, written LAST so a
-    crashed writer's rows stay invisible. ``maintain()`` collapses
-    the history to one row per live doc with the overwrite sequencing
-    proven on StoredBigramLM (commit log reset FIRST; refuse an
-    empty collapse over surviving data).
+    from its newest committed batch (``max_by`` on the commit
+    ``seq``), a NULL fingerprint is a tombstone (the doc left the
+    corpus); ``commits/`` — (batch, seq), one row per committed
+    apply, written LAST so a crashed writer's rows stay invisible.
+    ``maintain()`` collapses the history to one row per live doc
+    (append, then swap in a one-row log; an empty collapse over
+    surviving data is refused).
 
     Exactness: ``diff(new)`` after ``apply(old)`` is pinned
     row-identical to the one-shot ``snapshot_diff(old, new)`` (gate
@@ -1519,14 +1520,7 @@ class StoredSnapshot:
                  text_col: str = "text"):
         self.path = str(path).rstrip("/")
         self.id_col, self.text_col = id_col, text_col
-
-    def _has_state(self, spark) -> bool:
-        from .stored import has_commit_state
-        return has_commit_state(spark, self.path)
-
-    def _next_seq(self, spark) -> int:
-        from .stored import next_seq
-        return next_seq(spark, self.path)
+        self._log = CommitLog(self.path, ("fps",))
 
     def current(self, spark, id_type: str = "long") -> DataFrame:
         """Committed registry: (id, fingerprint) of every live doc.
@@ -1534,13 +1528,10 @@ class StoredSnapshot:
         stored schema to read yet); ``diff``/``apply`` pass the new
         snapshot's actual id type so non-bigint ids (URLs, hashes)
         join correctly from the first refresh."""
-        if not self._has_state(spark):
+        if not self._log.has_state(spark):
             return spark.createDataFrame(
                 [], f"{self.id_col} {id_type}, fingerprint string")
-        fps = spark.read.parquet(f"{self.path}/fps")
-        commits = spark.read.parquet(f"{self.path}/commits") \
-            .select("batch", "seq")
-        live = (fps.drop("seq").join(F.broadcast(commits), "batch")
+        live = (self._log.read(spark, "fps", with_seq=True)
                 .groupBy(self.id_col)
                 .agg(F.max_by("fingerprint", "seq").alias("fingerprint")))
         return live.where(F.col("fingerprint").isNotNull())
@@ -1580,7 +1571,6 @@ class StoredSnapshot:
         and commit replays against pre-batch state and re-derives the
         same delta (at-least-once to the sink, exactly-once to the
         state). Returns per-status counts."""
-        import uuid
         spark = new.sparkSession
         id_col = self.id_col
         d = self.diff(new, full=full).localCheckpoint(eager=True)
@@ -1589,17 +1579,12 @@ class StoredSnapshot:
         counts = {r["status"]: r["n"] for r in
                   d.groupBy("status").agg(F.count(F.lit(1)).alias("n"))
                   .collect()}
-        batch = uuid.uuid4().hex
-        seq = self._next_seq(spark)
         delta = d.where(F.col("status").isin("added", "changed",
                                              "removed")).select(
             F.col(id_col),
             F.when(F.col("status") != "removed", F.col("new_fp"))
-            .alias("fingerprint"),
-            F.lit(batch).alias("batch"), F.lit(seq).alias("seq"))
-        delta.write.mode("append").parquet(f"{self.path}/fps")
-        from .stored import append_commit
-        append_commit(spark, self.path, batch, seq, refresh=("fps",))
+            .alias("fingerprint"))
+        self._log.commit(spark, {"fps": delta})
         return {s: counts.get(s, 0)
                 for s in ("added", "removed", "changed", "unchanged")}
 
@@ -1639,54 +1624,12 @@ class StoredSnapshot:
         uncommitted orphans, compact small files. Serving is
         unchanged across the sweep (latest-per-doc of a single batch
         is itself)."""
-        from ..functions.maintenance import compact_if_fragmented
-        out: dict[str, object] = {}
-        if not self._has_state(spark):
-            return out
-        commits = spark.read.parquet(f"{self.path}/commits")
-        n_batches = commits.count()
-        if n_batches > 1:
-            fps = spark.read.parquet(f"{self.path}/fps")
-            # corruption test on COMMITTED rows (tombstones included):
-            # an all-tombstoned registry is legitimately live-empty
-            # and must still collapse; zero committed rows over
-            # non-empty data files is the corrupt shape
-            committed = fps.join(
-                F.broadcast(commits.select("batch")), "batch",
-                "left_semi")
-            if committed.isEmpty() and not fps.isEmpty():
-                raise ValueError(
-                    f"stored snapshot at {self.path}: commit log "
-                    f"names {n_batches} batches but none of their "
-                    "rows exist while the data files are non-empty "
-                    "— refusing to collapse (it would commit an "
-                    "empty registry over surviving data). Re-apply "
-                    "a full snapshot or repair the log.")
-            live = self.current(spark).localCheckpoint(eager=True)
-            import uuid
-            batch = uuid.uuid4().hex
-            # overwrite sequencing (the StoredBigramLM discipline):
-            # empty the log FIRST, then the data, then one commit row
-            spark.createDataFrame([], "batch string, seq long") \
-                .repartition(1).write.mode("overwrite") \
-                .parquet(f"{self.path}/commits")
-            (live.select(self.id_col, "fingerprint",
-                         F.lit(batch).alias("batch"),
-                         F.lit(0).cast("long").alias("seq"))
-             .write.mode("overwrite").parquet(f"{self.path}/fps"))
-            spark.createDataFrame([(batch, 0)],
-                                  "batch string, seq long") \
-                .repartition(1).write.mode("append") \
-                .parquet(f"{self.path}/commits")
-            for name in ("fps", "commits"):
-                spark.catalog.refreshByPath(f"{self.path}/{name}")
-            out["collapsed_batches"] = n_batches
-        res = compact_if_fragmented(
-            spark, f"{self.path}/fps", max_files=max_files,
-            target_file_bytes=target_file_bytes)
-        if res:
-            out["fps"] = res
-        return out
+        return self._log.maintain(spark, self._merged, 1,
+                                  max_files=max_files,
+                                  target_file_bytes=target_file_bytes)
+
+    def _merged(self, spark) -> dict:
+        return {"fps": self.current(spark).localCheckpoint(eager=True)}
 
 
 def semantic_order(df: DataFrame, id_col: str = "vec_id",
@@ -2361,20 +2304,20 @@ class StoredHistogram:
     """Persisted drift reference — :func:`dist_drift` against STORED
     bin counts: register the reference corpus once (or accumulate it
     over batches), then every refresh compares against the committed
-    histogram without rereading the reference. The ninth member of
-    the stored-state family (:func:`~pydin_spark.functions.
-    maintenance.maintain_states` contract, the commit-log discipline
-    of :class:`~pydin_spark.operators.text.StoredBigramLM`).
+    histogram without rereading the reference. A member of the
+    stored-state family (:func:`~pydin_spark.functions.
+    maintenance.maintain_states` contract, the commit log of
+    :class:`~pydin_spark.operators.stored.CommitLog`).
 
-    State under ``path``: ``bins/`` — (group?, bin, cnt, batch, seq)
+    State under ``path``: ``bins/`` — (group?, bin, cnt, batch)
     APPEND-only count deltas (bin counts are the mergeable sketch par
     excellence: serving is a SUM over committed rows, so
     ``extend(A); extend(B)`` ≡ ``extend(A ∪ B)`` exactly — pinned by
     test); ``commits/`` — (batch, seq), one row per committed extend,
     written LAST so a crashed writer's rows stay invisible.
-    ``maintain()`` collapses the history to one row per bin with the
-    proven overwrite sequencing (log reset FIRST; refuse an empty
-    collapse over surviving data).
+    ``maintain()`` collapses the history to one row per bin (append,
+    then swap in a one-row log; an empty collapse over surviving data
+    is refused).
 
     Exactness: ``drift(new)`` shares :func:`_drift_from_binned` with
     the live operator, so a reference built by extends is
@@ -2393,30 +2336,18 @@ class StoredHistogram:
         self.value_col = value_col
         self.w = float(bin_width)
         self.gcols = [group_col] if group_col else []
-
-    def _has_state(self, spark) -> bool:
-        from .stored import has_commit_state
-        return has_commit_state(spark, self.path)
+        self._log = CommitLog(self.path, ("bins",))
 
     def extend(self, df: DataFrame) -> int:
         """Accumulate a batch into the reference: bin it (the exact
         :func:`dist_drift` binning), append the count deltas, then
         ONE commit row last. Returns the number of bin rows
         appended."""
-        import uuid
-        from .stored import append_commit, next_seq
-        spark = df.sparkSession
         binned = _binned_counts(df, self.value_col, self.w,
                                 self.gcols, "cnt") \
             .localCheckpoint(eager=True)
         n = binned.count()
-        batch = uuid.uuid4().hex
-        seq = next_seq(spark, self.path)
-        (binned.withColumn("batch", F.lit(batch))
-         .withColumn("seq", F.lit(seq).cast("long"))
-         .write.mode("append").parquet(f"{self.path}/bins"))
-        append_commit(spark, self.path, batch, seq,
-                      refresh=("bins",))
+        self._log.commit(df.sparkSession, {"bins": binned})
         return int(n)
 
     def current(self, spark, cnt_name: str = "cnt") -> DataFrame:
@@ -2424,14 +2355,11 @@ class StoredHistogram:
         a SUM over committed deltas. Raises if no extend has ever
         committed (an absent reference is a config bug, not an empty
         distribution — the dist_drift zero-side philosophy)."""
-        if not self._has_state(spark):
+        if not self._log.has_state(spark):
             raise ValueError(
                 f"stored histogram at {self.path}: no committed "
                 "reference — extend() it before serving")
-        bins = spark.read.parquet(f"{self.path}/bins")
-        commits = spark.read.parquet(f"{self.path}/commits") \
-            .select("batch")
-        return (bins.join(F.broadcast(commits), "batch", "left_semi")
+        return (self._log.read(spark, "bins")
                 .groupBy(*self.gcols, "bin")
                 .agg(F.sum("cnt").alias(cnt_name)))
 
@@ -2485,57 +2413,14 @@ class StoredHistogram:
         files — the compaction pass also SWEEPS uncommitted orphan
         rows (crashed extends) via a committed-batch row filter, so
         orphan bytes are reclaimed even when no collapse runs.
-        Serving (a SUM) is unchanged across the sweep.
+        Serving (a SUM) is unchanged across the sweep, and a crash
+        mid-collapse keeps serving the previous reference."""
+        return self._log.maintain(spark, self._merged, 1,
+                                  max_files=max_files,
+                                  target_file_bytes=target_file_bytes)
 
-        Crash trade (the family-wide, advisor-adjudicated choice): a
-        crash MID-COLLAPSE reads as "no committed state" — the
-        reference must be re-extended — never as wrong counts. The
-        log is emptied FIRST precisely so the failure mode is loud
-        unavailability, not silent corruption; if rebuild cost ever
-        matters more than the extra write, stage under a fresh subdir
-        and swap last instead (the documented alternative)."""
-        from ..functions.maintenance import compact_if_fragmented
-        out: dict[str, object] = {}
-        if not self._has_state(spark):
-            return out
-        commits = spark.read.parquet(f"{self.path}/commits")
-        n_batches = commits.count()
-        committed_batches = [r["batch"] for r in
-                             commits.select("batch").collect()]
-        if n_batches > 1:
-            bins = spark.read.parquet(f"{self.path}/bins")
-            committed = bins.join(
-                F.broadcast(commits.select("batch")), "batch",
-                "left_semi")
-            if committed.isEmpty() and not bins.isEmpty():
-                raise ValueError(
-                    f"stored histogram at {self.path}: commit log "
-                    f"names {n_batches} batches but none of their "
-                    "rows exist while the data files are non-empty "
-                    "— refusing to collapse (it would commit an "
-                    "empty reference over surviving data).")
-            live = self.current(spark).localCheckpoint(eager=True)
-            import uuid
-            from .stored import append_commit
-            batch = uuid.uuid4().hex
-            # overwrite sequencing (the StoredBigramLM discipline):
-            # empty the log FIRST, then the data, then one commit row
-            spark.createDataFrame([], "batch string, seq long") \
-                .repartition(1).write.mode("overwrite") \
-                .parquet(f"{self.path}/commits")
-            (live.select(*self.gcols, "bin", "cnt",
-                         F.lit(batch).alias("batch"),
-                         F.lit(0).cast("long").alias("seq"))
-             .write.mode("overwrite").parquet(f"{self.path}/bins"))
-            append_commit(spark, self.path, batch, 0,
-                          refresh=("bins",))
-            out["collapsed_batches"] = n_batches
-            committed_batches = [batch]
-        out["compaction"] = compact_if_fragmented(
-            spark, f"{self.path}/bins", max_files=max_files,
-            target_file_bytes=target_file_bytes,
-            row_filter=F.col("batch").isin(committed_batches))
-        return out
+    def _merged(self, spark) -> dict:
+        return {"bins": self.current(spark).localCheckpoint(eager=True)}
 
 
 def domain_capped_corpus(df: DataFrame, k_per_domain: int = 3,

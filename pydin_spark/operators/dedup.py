@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .stored import CommitLog
 from .text import fingerprint as _fingerprint
 
 _SIZE_SUFFIX = {"b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30,
@@ -1316,40 +1317,9 @@ class IncrementalDeduper:
         self.num_hashes, self.bands = num_hashes, bands
         self.threshold = threshold
         self.max_pushdown_ids = max_pushdown_ids
+        self._log = CommitLog(self.path, self._TABLES)
 
     _TABLES = ("buckets", "shingles", "sizes")
-
-    def _table_path(self, name: str):
-        return f"{self.path}/{name}"
-
-    def _bucket_path(self):
-        return self._table_path("buckets")
-
-    def _shingle_path(self):
-        return self._table_path("shingles")
-
-    def _has_state(self, spark):
-        # probe through the Spark reader, not os.path — the state can
-        # live on any Hadoop-compatible filesystem (hdfs://, s3a://...)
-        try:
-            spark.read.parquet(self._table_path("commits")).schema
-            return True
-        except Exception as exc:  # noqa: BLE001 - classify, don't blanket
-            text = f"{type(exc).__name__}: {exc}"
-            if ("PATH_NOT_FOUND" in text or "Path does not exist" in text
-                    or "UNABLE_TO_INFER_SCHEMA" in text
-                    or "Unable to infer schema" in text):
-                return False
-            raise
-
-    def _read_committed(self, spark, name: str) -> DataFrame:
-        """A state table restricted to committed batches — the
-        broadcast semi-join on the (tiny) commits table is a map-side
-        filter, no shuffle."""
-        df = spark.read.parquet(self._table_path(name))
-        commits = spark.read.parquet(self._table_path("commits"))
-        return (df.join(F.broadcast(commits), "batch", "left_semi")
-                .drop("batch"))
 
     def _new_state(self, docs: DataFrame, owned: list | None = None):
         sh = word_shingles(docs, self.id_col, self.text_col, self.n,
@@ -1391,12 +1361,12 @@ class IncrementalDeduper:
     def _check_lazy(self, docs: DataFrame, owned: list) -> DataFrame:
         spark = docs.sparkSession
         id_c = self.id_col
-        if not self._has_state(spark):
+        if not self._log.has_state(spark):
             return self._empty_pairs(docs)
         new_sh, new_buckets = self._new_state(docs, owned)
         new_buckets = new_buckets.persist()
         owned.append(new_buckets)
-        st_buckets = self._read_committed(spark, "buckets")
+        st_buckets = self._log.read(spark, "buckets")
         # bucket-key pushdown, same contract as the id pushdown below:
         # the batch touches ≤ batch×bands bucket hashes; within the cap,
         # push them into the bucket-state scan (files sorted by bh →
@@ -1415,8 +1385,8 @@ class IncrementalDeduper:
                 .select("id_new", "id_old").distinct()
                 .persist())
         owned.append(cand)
-        st_sh = self._read_committed(spark, "shingles")
-        st_sizes = self._read_committed(spark, "sizes")
+        st_sh = self._log.read(spark, "shingles")
+        st_sizes = self._log.read(spark, "sizes")
         # candidate-id pushdown: the candidate set is batch-bounded by
         # construction (batch size × bucket hit rate); when it fits the
         # cap, push it into the parquet scans so row groups outside the
@@ -1454,25 +1424,14 @@ class IncrementalDeduper:
         commit it. The commit row goes last: readers ignore every state
         row whose batch id has no commit row, so a crash anywhere in
         this sequence is invisible (atomic multi-table append)."""
-        import uuid
-        spark = survivors.sparkSession
-        batch_id = uuid.uuid4().hex
-        tag = F.lit(batch_id).alias("batch")
         sh, buckets = self._new_state(survivors, owned)
-        # sort buckets by bh inside each file: the batch bucket-key In
-        # filter then prunes row groups via min/max stats
-        buckets.select("*", tag).sortWithinPartitions("bh") \
-            .write.mode("append").parquet(self._table_path("buckets"))
-        # sort postings by id inside each file: candidate-id In filters
-        # then prune row groups via min/max stats
-        sh.select("*", tag).sortWithinPartitions(self.id_col) \
-            .write.mode("append").parquet(self._table_path("shingles"))
-        sizes = sh.groupBy(self.id_col).agg(
-            F.count(F.lit(1)).alias("sz"))
-        sizes.select("*", tag).write.mode("append") \
-            .parquet(self._table_path("sizes"))
-        spark.createDataFrame([(batch_id,)], "batch string") \
-            .write.mode("append").parquet(self._table_path("commits"))
+        sizes = sh.groupBy(self.id_col).agg(F.count(F.lit(1)).alias("sz"))
+        # buckets sorted by bh and postings by id inside each file: the
+        # batch's In filters then prune row groups via min/max stats
+        self._log.commit(survivors.sparkSession, {
+            "buckets": buckets.sortWithinPartitions("bh"),
+            "shingles": sh.sortWithinPartitions(self.id_col),
+            "sizes": sizes})
 
     def ingest(self, docs: DataFrame,
                survivors_path: str | None = None) -> DataFrame:
@@ -1514,69 +1473,26 @@ class IncrementalDeduper:
         orphan rows from crashed appends in the same rewrite. When the
         commit log exceeds ``checkpoint_above`` batches,
         :meth:`checkpoint_state` collapses them first — the commit
-        table is broadcast on every read and must stay bounded. Uses
-        the engine's atomic staged-rewrite compaction. Returns
-        per-table before/after stats for tables it touched."""
-        from ..functions.maintenance import compact, dataset_stats
-        out = {}
-        try:
-            n_commits = spark.read.parquet(
-                self._table_path("commits")).count()
-        except Exception:  # noqa: BLE001 - no state yet
-            return out
-        if n_commits > checkpoint_above:
-            out["checkpoint"] = self.checkpoint_state(spark)
-        for name in self._TABLES + ("commits",):
-            path = self._table_path(name)
-            try:
-                stats = dataset_stats(spark, path)
-            except Exception:  # noqa: BLE001 - no state yet
-                continue
-            if stats["files"] > max_files:
-                keep = None
-                if name != "commits":
-                    commits = spark.read.parquet(
-                        self._table_path("commits"))
-                    keep = F.col("batch").isin(
-                        [r["batch"] for r in commits.collect()])
-                out[name] = compact(spark, path, row_filter=keep)
-        return out
+        table is broadcast on every read and must stay bounded.
+        Returns per-table compaction stats, plus ``collapsed_batches``
+        when the log was collapsed."""
+        return self._log.maintain(spark, self._merged, checkpoint_above,
+                                  max_files=max_files)
+
+    def _merged(self, spark) -> dict:
+        return {name: self._log.read(spark, name) for name in self._TABLES}
 
     def checkpoint_state(self, spark) -> dict:
         """Collapse every committed batch into ONE batch id, bounding
         the commit log however many ingests the deduper has absorbed
-        (1 row/batch otherwise — broadcast per read and collected in
-        ``maintain``, so it must not grow forever).
-
-        Crash-safe by the same visibility rule as ingest: (1) the
-        merged rows are APPENDED under a fresh batch id — invisible
-        until committed, so a crash here changes nothing; (2) the
-        commit log is atomically replaced (staged dir + rename) with
-        the single merged id — before the swap readers see exactly the
-        old batches, after it exactly the merged copy, never both and
-        never neither; (3) the now-dead per-batch rows are swept by the
-        compaction pass that follows (they are uncommitted from step 2
-        on, so correctness never depends on the sweep)."""
-        import uuid
-
-        from .. import fs
-
-        merged = uuid.uuid4().hex
-        tag = F.lit(merged).alias("batch")
-        sort_key = {"buckets": "bh", "shingles": self.id_col,
-                    "sizes": self.id_col}
-        n_before = spark.read.parquet(self._table_path("commits")).count()
-        for name in self._TABLES:
-            df = self._read_committed(spark, name)
-            df.select("*", tag).sortWithinPartitions(sort_key[name]) \
-                .write.mode("append").parquet(self._table_path(name))
-        commits_path = self._table_path("commits")
-        staging = commits_path + ".__checkpoint__"
-        spark.createDataFrame([(merged,)], "batch string") \
-            .write.mode("overwrite").parquet(staging)
-        fs.replace_dir(spark, staging, commits_path)
-        spark.catalog.refreshByPath(commits_path)
-        return {"batches_before": n_before, "merged_batch": merged}
+        (1 row/batch otherwise — broadcast per read, so it must not
+        grow forever). The merged rows are appended under a fresh
+        batch id, then a one-row log is swapped in: a crash at any
+        point serves exactly the old batches or the merged copy
+        (:meth:`~pydin_spark.operators.stored.CommitLog.commit`)."""
+        res = self._log.collapse(spark, self._merged)
+        return {"batches_before": res["collapsed_batches"],
+                "merged_batch": res["batch"]}
 
     def ingest_stream(self, stream_df: DataFrame, checkpoint: str,
                       survivors_path: str | None = None,

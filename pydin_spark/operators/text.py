@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .stored import CommitLog
+
 #: whitespace-token split used everywhere (texts are single-space joined)
 def _tokens(text_col: str) -> Column:
     return F.split(F.col(text_col), " ")
@@ -1281,28 +1283,14 @@ class IncrementalLineDeduper:
         self.id_col, self.text_col = id_col, text_col
         self.sep, self.min_tokens = sep, min_tokens
         self.join_sep = join_sep if join_sep is not None else sep
-
-    def _has_state(self, spark) -> bool:
-        try:
-            spark.read.parquet(f"{self.path}/commits").schema
-            return True
-        except Exception as exc:  # noqa: BLE001 - classify, don't blanket
-            msg = f"{type(exc).__name__}: {exc}"
-            if ("PATH_NOT_FOUND" in msg or "Path does not exist" in msg
-                    or "UNABLE_TO_INFER_SCHEMA" in msg
-                    or "Unable to infer schema" in msg):
-                return False
-            raise
+        self._log = CommitLog(self.path, ("firsts",))
 
     def seen_lines(self, spark) -> DataFrame:
         """Committed state: (line, id, pos) of every keeper so far."""
-        if not self._has_state(spark):
+        if not self._log.has_state(spark):
             return spark.createDataFrame(
                 [], f"line string, {self.id_col} string, pos int")
-        st = spark.read.parquet(f"{self.path}/firsts")
-        commits = spark.read.parquet(f"{self.path}/commits")
-        return (st.join(F.broadcast(commits), "batch", "left_semi")
-                .drop("batch"))
+        return self._log.read(spark, "firsts")
 
     def ingest(self, docs: DataFrame,
                rewritten_path: str | None = None) -> DataFrame:
@@ -1315,8 +1303,6 @@ class IncrementalLineDeduper:
         batch against pre-batch state and re-derives the same rewrite
         (at-least-once to the sink — dedup downstream by id —
         exactly-once to the state)."""
-        import uuid
-
         spark = docs.sparkSession
         id_col = self.id_col
         lines = docs.select(
@@ -1358,17 +1344,10 @@ class IncrementalLineDeduper:
         # reproduces the same output (at-least-once, never silent loss)
         if rewritten_path is not None:
             result.write.mode("append").parquet(rewritten_path)
-        batch_id = uuid.uuid4().hex
-        (new_firsts.select(
+        self._log.commit(spark, {"firsts": new_firsts.select(
             "line",
             F.col(f"__first.{id_col}").cast("string").alias(id_col),
-            F.col("__first.pos").alias("pos"),
-            F.lit(batch_id).alias("batch"))
-         .write.mode("append").parquet(f"{self.path}/firsts"))
-        spark.createDataFrame([(batch_id,)], "batch string") \
-            .write.mode("append").parquet(f"{self.path}/commits")
-        spark.catalog.refreshByPath(f"{self.path}/firsts")
-        spark.catalog.refreshByPath(f"{self.path}/commits")
+            F.col("__first.pos").alias("pos"))})
         return result
 
     def ingest_stream(self, stream_df: DataFrame, checkpoint: str,
@@ -1408,54 +1387,20 @@ class IncrementalLineDeduper:
         uncommitted orphan rows from crashed appends in the same
         rewrite (rows whose ``batch`` has no commit row are invisible
         to readers already — the sweep just reclaims their bytes)."""
-        from ..functions.maintenance import compact_if_fragmented
-        out: dict[str, object] = {}
-        try:
-            n_commits = spark.read.parquet(
-                f"{self.path}/commits").count()
-        except Exception:  # noqa: BLE001 - no state yet
-            return out
-        if n_commits > checkpoint_above:
-            self.checkpoint_state()
-            out["checkpoint"] = {"commits_before": n_commits}
-        committed = [r["batch"] for r in spark.read.parquet(
-            f"{self.path}/commits").collect()]
-        res = compact_if_fragmented(
-            spark, f"{self.path}/firsts", max_files=max_files,
-            row_filter=F.col("batch").isin(committed))
-        if res:
-            out["firsts"] = res
-        res = compact_if_fragmented(spark, f"{self.path}/commits",
-                                    max_files=max_files)
-        if res:
-            out["commits"] = res
-        return out
+        return self._log.maintain(spark, self._merged, checkpoint_above,
+                                  max_files=max_files)
+
+    def _merged(self, spark) -> dict:
+        return {"firsts":
+                self.seen_lines(spark).localCheckpoint(eager=True)}
 
     def checkpoint_state(self) -> None:
         """Collapse N committed batches into one (the commit log is
-        read per ingest and must stay bounded). Same
-        invisible-until-committed crash safety: the compacted state is
-        written under a fresh batch id into fresh directories and
-        swapped in by directory rename."""
-        import uuid
-
+        read per ingest and must stay bounded), with the deduper's
+        append-then-swap crash safety
+        (:meth:`~pydin_spark.operators.stored.CommitLog.commit`)."""
         from pyspark.sql import SparkSession
-
-        from .. import fs
-        spark = SparkSession.getActiveSession()
-        st = self.seen_lines(spark).localCheckpoint(eager=True)
-        batch_id = uuid.uuid4().hex
-        tmp_f, tmp_c = f"{self.path}/firsts.__new__", \
-            f"{self.path}/commits.__new__"
-        st.select("*", F.lit(batch_id).alias("batch")) \
-            .write.mode("overwrite").parquet(tmp_f)
-        spark.createDataFrame([(batch_id,)], "batch string") \
-            .write.mode("overwrite").parquet(tmp_c)
-        for tmp, live in ((tmp_f, f"{self.path}/firsts"),
-                          (tmp_c, f"{self.path}/commits")):
-            fs.replace_dir(spark, tmp, live)
-        spark.catalog.refreshByPath(f"{self.path}/firsts")
-        spark.catalog.refreshByPath(f"{self.path}/commits")
+        self._log.collapse(SparkSession.getActiveSession(), self._merged)
 
 
 def normalize_text(df: DataFrame, id_col: str = "doc_id",
@@ -2034,15 +1979,11 @@ class StoredBigramLM:
     batch id and lands ONE commit row last; readers semi-join on
     committed ids, so a crashed ``extend`` leaves only invisible rows
     (``maintain`` sweeps them and compacts deltas into one row per
-    key). The OVERWRITE paths (``build``, ``maintain``'s collapse)
-    destroy previously-committed rows by construction, so they reset
-    the commit log to EMPTY first: a crash mid-overwrite reads as
-    "no committed state" (score() refuses on the empty vocabulary)
-    rather than as stale commit ids pointing at vanished batches —
-    the state can be lost to a crash there, but never served wrong,
-    and a later ``maintain`` can never collapse-and-commit an empty
-    read over surviving data files (it additionally refuses that
-    collapse outright).
+    key). ``build`` and ``maintain``'s collapse append their rows
+    under a fresh batch and then swap in a one-row commit log
+    (:class:`~pydin_spark.operators.stored.CommitLog`): a crash at
+    any point keeps serving the previous LM, never an empty or
+    partial one.
 
     ``score(docs)`` is :func:`bigram_logprob`'s formula against the
     STORED counts — ``ln((c2 + a) / (c1 + a*V))`` averaged per doc,
@@ -2055,25 +1996,13 @@ class StoredBigramLM:
     def __init__(self, path: str, alpha: float = 0.5):
         self.path = str(path).rstrip("/")
         self.alpha = float(alpha)
-
-    def _commits_path(self):
-        return f"{self.path}/commits"
-
-    def _committed(self, spark):
-        try:
-            return (spark.read.parquet(self._commits_path())
-                    .select("batch_id"))
-        except Exception:  # noqa: BLE001 - no state yet
-            return None
+        self._log = CommitLog(self.path, ("vocab", "hist", "pair"))
 
     def _read(self, spark, name: str) -> DataFrame:
-        commits = self._committed(spark)
-        if commits is None:
+        if not self._log.has_state(spark):
             raise ValueError(
                 f"no stored LM at {self.path} — build() first")
-        rows = spark.read.parquet(f"{self.path}/{name}")
-        return rows.join(commits.hint("broadcast"), "batch_id") \
-            .drop("batch_id")
+        return self._log.read(spark, name)
 
     @staticmethod
     def _bigrams(df: DataFrame, id_col: str, text_col: str):
@@ -2092,61 +2021,31 @@ class StoredBigramLM:
             .select(F.col(id_col), F.col("b.w1"), F.col("b.w2")),
             base)
 
-    def _reset_commits(self, spark) -> None:
-        """Overwrite the commit log with ZERO rows. Run before any
-        overwrite of the data tables: between this and the final
-        commit row, readers see "no committed state" — never stale
-        ids pointing at batches the overwrite has already vaporized.
-        """
-        spark.createDataFrame([], "batch_id string") \
-            .repartition(1).write.mode("overwrite") \
-            .parquet(self._commits_path())
-        spark.catalog.refreshByPath(self._commits_path())
-
     def _write_batch(self, corpus: DataFrame, id_col: str,
-                     text_col: str, mode: str) -> dict:
-        import uuid
-        spark = corpus.sparkSession
-        if mode == "overwrite":
-            self._reset_commits(spark)
-        bid = uuid.uuid4().hex
+                     text_col: str, replace: bool) -> dict:
         big, base = self._bigrams(corpus, id_col, text_col)
         big = big.persist()
-        tag = F.lit(bid).alias("batch_id")
-        vocab = (base.select(F.explode("t").alias("w"))
-                 .distinct().select("w", tag))
-        hist = (big.groupBy("w1")
-                .agg(F.count(F.lit(1)).alias("c1")).select(
-                    "w1", "c1", tag))
-        pair = (big.groupBy("w1", "w2")
-                .agg(F.count(F.lit(1)).alias("c2")).select(
-                    "w1", "w2", "c2", tag))
-        vocab.write.mode(mode).parquet(f"{self.path}/vocab")
-        hist.write.mode(mode).parquet(f"{self.path}/hist")
-        pair.write.mode(mode).parquet(f"{self.path}/pair")
+        frames = {
+            "vocab": base.select(F.explode("t").alias("w")).distinct(),
+            "hist": big.groupBy("w1").agg(F.count(F.lit(1)).alias("c1")),
+            "pair": big.groupBy("w1", "w2")
+            .agg(F.count(F.lit(1)).alias("c2"))}
+        bid = self._log.commit(corpus.sparkSession, frames,
+                               replace=replace)
         big.unpersist()
-        # the commit row lands LAST — the batch is invisible until it
-        # does. On the overwrite path the log was already reset to
-        # EMPTY before the data overwrites above, so this append is
-        # the atomic visibility flip for build() too.
-        spark.createDataFrame([(bid,)], "batch_id string") \
-            .repartition(1).write.mode("append") \
-            .parquet(self._commits_path())
-        for name in ("vocab", "hist", "pair", "commits"):
-            spark.catalog.refreshByPath(f"{self.path}/{name}")
         return {"batch_id": bid}
 
     def build(self, corpus: DataFrame, id_col: str = "doc_id",
               text_col: str = "text") -> dict:
-        """Train from scratch (overwrites any prior state)."""
-        return self._write_batch(corpus, id_col, text_col, "overwrite")
+        """Train from scratch (replaces any prior state)."""
+        return self._write_batch(corpus, id_col, text_col, True)
 
     def extend(self, corpus: DataFrame, id_col: str = "doc_id",
                text_col: str = "text") -> dict:
         """Add a corpus batch to the LM — counts merge additively, so
         extend(B) after build(A) serves the IDENTICAL model as
         build(A+B) (pinned by test)."""
-        return self._write_batch(corpus, id_col, text_col, "append")
+        return self._write_batch(corpus, id_col, text_col, False)
 
     def vocab_size(self, spark) -> int:
         return self._read(spark, "vocab").select("w").distinct().count()
@@ -2187,65 +2086,20 @@ class StoredBigramLM:
         one row per key once the commit log fragments, and compact
         small files. Serve results are unchanged across the sweep
         (sums of sums)."""
-        from ..functions.maintenance import compact_if_fragmented
-        out: dict[str, object] = {}
-        commits = self._committed(spark)
-        if commits is None:
-            return out
-        ids = [r["batch_id"] for r in commits.collect()]
-        if len(ids) > 1:
-            # collapse: aggregate committed rows into ONE new batch.
-            # The checkpoints are EAGER — the committed state is fully
-            # materialized off the parquet files before anything below
-            # touches them.
-            import uuid
-            bid = uuid.uuid4().hex
-            tag = F.lit(bid).alias("batch_id")
-            vocab = (self._read(spark, "vocab").distinct()
-                     .select("w", tag).localCheckpoint(eager=True))
-            hist = (self._read(spark, "hist").groupBy("w1")
-                    .agg(F.sum("c1").alias("c1"))
-                    .select("w1", "c1", tag)
-                    .localCheckpoint(eager=True))
-            pair = (self._read(spark, "pair").groupBy("w1", "w2")
-                    .agg(F.sum("c2").alias("c2"))
-                    .select("w1", "w2", "c2", tag)
-                    .localCheckpoint(eager=True))
-            if (vocab.isEmpty()
-                    and not spark.read.parquet(
-                        f"{self.path}/vocab").isEmpty()):
-                # commit log and data files disagree (e.g. a log
-                # restored from elsewhere, or pre-fix state from a
-                # crashed overwrite): collapsing would commit an EMPTY
-                # LM over surviving data — refuse rather than destroy
-                raise ValueError(
-                    f"stored LM at {self.path}: commit log names "
-                    f"{len(ids)} batches but none of their rows exist "
-                    "in the data files, which are non-empty — "
-                    "refusing to collapse (it would commit an empty "
-                    "LM over surviving data). Rebuild with build() "
-                    "or repair the commit log.")
-            # overwrite sequencing: empty the commit log FIRST, then
-            # overwrite data, then land the one commit row — a crash
-            # anywhere between reads as "no committed state", never
-            # as stale ids over vanished batches
-            self._reset_commits(spark)
-            vocab.write.mode("overwrite").parquet(f"{self.path}/vocab")
-            hist.write.mode("overwrite").parquet(f"{self.path}/hist")
-            pair.write.mode("overwrite").parquet(f"{self.path}/pair")
-            spark.createDataFrame([(bid,)], "batch_id string") \
-                .repartition(1).write.mode("append") \
-                .parquet(self._commits_path())
-            for name in ("vocab", "hist", "pair", "commits"):
-                spark.catalog.refreshByPath(f"{self.path}/{name}")
-            out["collapsed_batches"] = len(ids)
-        for name in ("vocab", "hist", "pair"):
-            res = compact_if_fragmented(
-                spark, f"{self.path}/{name}", max_files=max_files,
-                target_file_bytes=target_file_bytes)
-            if res:
-                out[name] = res
-        return out
+        return self._log.maintain(spark, self._merged, 1,
+                                  max_files=max_files,
+                                  target_file_bytes=target_file_bytes)
+
+    def _merged(self, spark) -> dict:
+        # EAGER checkpoints: the committed state is fully materialized
+        # off the parquet files before the collapse appends to them
+        return {
+            "vocab": self._read(spark, "vocab").distinct()
+            .localCheckpoint(eager=True),
+            "hist": self._read(spark, "hist").groupBy("w1")
+            .agg(F.sum("c1").alias("c1")).localCheckpoint(eager=True),
+            "pair": self._read(spark, "pair").groupBy("w1", "w2")
+            .agg(F.sum("c2").alias("c2")).localCheckpoint(eager=True)}
 
 
 def compression_ratio(df: DataFrame, id_col: str = "doc_id",

@@ -969,7 +969,7 @@ def test_incremental_checkpoint_collapses_commit_log(spark, tmp_path):
         [(500, "wholly new content zeta eta theta iota kappa")],
         "doc_id long, text string"))
     out = d.maintain(spark, max_files=10_000, checkpoint_above=1)
-    assert "checkpoint" in out and out["checkpoint"]["batches_before"] == 2
+    assert out["collapsed_batches"] == 2
 
 
 def test_leakage_safe_split_keeps_clusters_together(spark):

@@ -607,32 +607,8 @@ def test_stored_lm_maintain_collapses_and_serves_identically(
     out = lm.maintain(spark)
     assert out.get("collapsed_batches") == 3
     # one committed batch remains; serve is bit-identical
-    assert lm._committed(spark).count() == 1
+    assert spark.read.parquet(f"{lm.path}/commits").count() == 1
     assert sorted(map(str, lm.score(probe).collect())) == before
-
-
-def test_stored_lm_crashed_overwrite_reads_as_no_state(
-        spark, views, tmp_path):
-    """A crash between build()'s commit-log reset and its final commit
-    row must read as 'no committed state' — score() refuses on the
-    empty vocabulary instead of serving a partial/stale LM — and both
-    maintain() and a fresh build() recover it."""
-    from pydin_spark.operators.text import StoredBigramLM
-    d = spark.table("documents").limit(30)
-    lm = StoredBigramLM(str(tmp_path / "lm"))
-    lm.build(d)
-    # simulate the crash point: rebuild reset the log, then died
-    # before (or during) the data overwrites
-    lm._reset_commits(spark)
-    assert lm.vocab_size(spark) == 0
-    with pytest.raises(ValueError, match="empty vocabulary"):
-        lm.score(d)
-    # maintain() sees zero committed batches: no collapse, no damage
-    assert "collapsed_batches" not in lm.maintain(spark)
-    # and a re-run of the interrupted build restores service
-    lm.build(d)
-    assert lm.vocab_size(spark) > 0
-    assert lm.score(d).count() > 0
 
 
 def test_stored_lm_maintain_refuses_empty_collapse(spark, views,
@@ -645,11 +621,11 @@ def test_stored_lm_maintain_refuses_empty_collapse(spark, views,
     lm = StoredBigramLM(str(tmp_path / "lm"))
     lm.build(spark.table("documents").limit(20))
     # forge a log that names only batches absent from the data files
-    spark.createDataFrame([("dead1",), ("dead2",)],
-                          "batch_id string") \
+    spark.createDataFrame([("dead1", 0), ("dead2", 1)],
+                          "batch string, seq long") \
         .repartition(1).write.mode("overwrite") \
-        .parquet(lm._commits_path())
-    spark.catalog.refreshByPath(lm._commits_path())
+        .parquet(f"{lm.path}/commits")
+    spark.catalog.refreshByPath(f"{lm.path}/commits")
     with pytest.raises(ValueError, match="refusing to collapse"):
         lm.maintain(spark)
     # the data files survived the refusal
