@@ -30,6 +30,8 @@ import datetime as dt
 
 from pyspark.sql import DataFrame, functions as F
 
+from .stored import _is_missing
+
 
 def rollup_aggregate(df: DataFrame, ts_col: str = "ts",
                      bucket: str = "1 hour",
@@ -157,10 +159,7 @@ class _BucketState:
             # any other read failure (e.g. a corrupt footer from a
             # killed writer) must surface, NOT silently reroute refresh
             # into a full overwrite that erases history
-            text = f"{type(exc).__name__}: {exc}"
-            if ("PATH_NOT_FOUND" in text or "Path does not exist" in text
-                    or "UNABLE_TO_INFER_SCHEMA" in text
-                    or "Unable to infer schema" in text):
+            if _is_missing(exc):
                 return False
             raise
 

@@ -1,23 +1,32 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Three tiers, trading exactness for scale:
+Every exact tier shares one contract: generate candidate pairs, score
+each with the sequential-fold double cosine (:func:`_cosine` over
+:func:`_vectors` rows), then rank ``(cosine desc, nbr_id)``
+(:func:`_rank_topk`) or cut at a threshold. The score is
+IEEE-deterministic and matches the DuckDB oracles bit for bit whatever
+candidate superset the first step produced, so the tiers differ only
+in how they generate candidates:
 
-- ``cosine_topk``: exact brute force as composable DataFrame expressions
-  (``F.aggregate`` dot products in double — deterministic, oracle-
-  matchable). Query side is broadcast; cost O(|queries|·|corpus|·dim)
-  distributed over corpus partitions. Right up to ~10^6·k pairs.
-- ``cosine_topk_arrow``: same exact semantics through a vectorized Arrow
-  batch path (numpy matmul per partition) — the throughput option; float
-  summation order differs from the expression path so it is benchmarked,
-  not oracle-hashed.
-- ``lsh_topk``: random-hyperplane LSH bucketing so each query only scans
-  its bucket — the 100 TB path. Recall < 1 by construction; bucket fan-out
-  (``probe_bits``) trades recall for cost.
+- broadcast join of a small query set: ``cosine_topk``,
+  ``hard_negatives``;
+- random-hyperplane bucket join: ``lsh_topk``,
+  ``cosine_dup_pairs(method='lsh')``;
+- IVF inverted-list join: ``ivf_topk``, ``IVFIndex.query``;
+- numpy block-matrix prefilter: ``cosine_dup_pairs``, ``knn_graph``;
+- numpy IVF-cell prefilter: ``ivf_knn_graph``;
+- k-means cluster self-join: ``semantic_dup_pairs``.
+
+``cosine_topk_arrow`` scores in numpy (float summation order differs,
+so it is benchmarked, not oracle-hashed) and shares only the rank; the
+PQ tiers rank an asymmetric distance ascending through the same tail.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
+
+from .stored import _is_missing
 
 
 def _dot(a, b):
@@ -27,6 +36,105 @@ def _dot(a, b):
 
 def _norm(a):
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
+
+
+def _vectors(df: DataFrame, id_col: str, vec_col: str, side: str = "",
+             id_as: str | None = None, keep=()) -> DataFrame:
+    """The per-row scoring substrate: the id (renamed to ``id_as``),
+    any ``keep`` columns, the vector cast to double as ``__v<side>``
+    and its L2 norm as ``__n<side>``.
+
+    The cast vector and the norm are row columns BELOW every pair
+    join. Both are interpreted O(dim) folds: inlined into the per-pair
+    cosine they re-ran once per candidate pair (and once per plane or
+    centroid where a bucket key reads the vector); as row columns each
+    runs once per vector. The fold and the ``dot / (na * nb)``
+    association are unchanged, so values stay IEEE-identical. A vector
+    that is already ``array<double>`` is not re-cast.
+    """
+    vec = F.col(vec_col)
+    if dict(df.dtypes)[vec_col] != "array<double>":
+        vec = F.transform(vec, lambda x: x.cast("double"))
+    return (df.select(F.col(id_col).alias(id_as or id_col), *keep,
+                      vec.alias(f"__v{side}"))
+            .withColumn(f"__n{side}", _norm(F.col(f"__v{side}"))))
+
+
+def _pair_sides(sub: DataFrame, id_col: str, ids: tuple, keep=()):
+    """The ``a`` and ``b`` sides of a self-pair join over one
+    :func:`_vectors` substrate, ids renamed to ``ids``. The substrate
+    feeds both sides, so callers persist it: uncached, its scan, cast
+    and norm fold run once per side."""
+    return tuple(sub.select(*keep, F.col(id_col).alias(i),
+                            F.col("__v").alias(f"__v{s}"),
+                            F.col("__n").alias(f"__n{s}"))
+                 for i, s in zip(ids, "ab"))
+
+
+def _cosine():
+    """The exact pair score over an ``a`` and a ``b`` side: sequential
+    double folds, ``dot / (na * nb)``."""
+    return (_dot(F.col("__va"), F.col("__vb"))
+            / (F.col("__na") * F.col("__nb"))).alias("cosine")
+
+
+def _rank_topk(scored: DataFrame, by: str, k: int, score: str = "cosine",
+               ascending: bool = False) -> DataFrame:
+    """The top-k tail: ``row_number`` per ``by`` ordered by ``score``
+    (descending unless ``ascending``) with ties on ``nbr_id``, cut at
+    ``k``. Output: (by, nbr_id, score, rnk)."""
+    order = F.col(score).asc() if ascending else F.col(score).desc()
+    w = Window.partitionBy(by).orderBy(order, F.col("nbr_id"))
+    return (scored.withColumn("rnk", F.row_number().over(w))
+            .where(F.col("rnk") <= int(k))
+            .select(by, "nbr_id", score, "rnk"))
+
+
+def _hyperplane_bits(df: DataFrame, vec_col: str, planes: int, seed: int):
+    """Bucket-key builder of the random-hyperplane tiers: bit ``p`` of
+    the key is set when the double vector's dot product with row ``p``
+    of ``RandomState(seed).randn(planes, dim)`` is positive, ``dim``
+    taken from the first row of ``df``. With no row there is no
+    dimension to draw planes for; every key is then 0 and the
+    caller's bucket join over the empty ``df`` is empty, with its
+    usual schema."""
+    import numpy as np
+
+    first = df.select(vec_col).first()
+    if first is None:
+        return lambda v: F.lit(0)
+    hyper = np.random.RandomState(seed).randn(planes, len(first[0]))
+
+    def bits(v):
+        key = F.lit(0)
+        for p in range(planes):
+            plane = F.array(*[F.lit(float(c)) for c in hyper[p]])
+            key = key + F.when(_dot(v, plane) > 0,
+                               F.lit(1 << p)).otherwise(0)
+        return key
+    return bits
+
+
+def _map_groups(frame: DataFrame, keys: list, nparts: int, emit,
+                schema: str) -> DataFrame:
+    """Run ``emit(key, group_pdf)`` once per ``keys`` group through a
+    fixed-``nparts`` repartition and a per-partition pandas groupby
+    under ``mapInPandas`` — NOT groupBy().applyInPandas(): the matmul
+    work per group far outweighs its shuffle bytes, so AQE's
+    size-based coalescing would squash the groups onto a handful of
+    tasks and serialize the compute."""
+
+    def run(batches):
+        import pandas as pd
+        pdfs = list(batches)
+        if not pdfs:
+            return
+        pdf = pd.concat(pdfs, ignore_index=True)
+        for key, group in pdf.groupby(keys, sort=False):
+            yield emit(key, group)
+
+    return (frame.repartition(nparts, *keys)
+            .mapInPandas(run, schema=schema))
 
 
 def with_unit_norm(df: DataFrame, vec_col: str = "embedding",
@@ -89,31 +197,11 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     with sequential folds, so values are IEEE-deterministic and match the
     SQL oracle bit-for-bit. Ties break on neighbor id.
     """
-    # Norms are projected BELOW the join (round-10): the cosine
-    # expression above the BroadcastNestedLoopJoin used to re-fold
-    # ``_norm`` over both vectors once per (corpus × query) PAIR;
-    # with per-row norm columns each vector is folded once per ROW
-    # and the pair expression is one dot + one divide — ~60% fewer
-    # interpreted HOF evaluations at identical IEEE results (the
-    # norm value and the (cn * qn) association order are unchanged).
-    c = corpus.select(F.col(id_col).alias("nbr_id"),
-                      F.transform(F.col(vec_col),
-                                  lambda v: v.cast("double")).alias("cv")) \
-              .withColumn("__cn", _norm(F.col("cv")))
-    q = queries.select(F.col(query_id_col),
-                       F.transform(F.col(vec_col),
-                                   lambda v: v.cast("double")).alias("qv")) \
-               .withColumn("__qn", _norm(F.col("qv")))
+    c = _vectors(corpus, id_col, vec_col, "a", id_as="nbr_id")
+    q = _vectors(queries, query_id_col, vec_col, "b")
     pairs = c.join(F.broadcast(q), F.col("nbr_id") != F.col(query_id_col))
-    scored = pairs.select(
-        F.col(query_id_col), F.col("nbr_id"),
-        (_dot(F.col("cv"), F.col("qv"))
-         / (F.col("__cn") * F.col("__qn"))).alias("cosine"))
-    w = (Window.partitionBy(query_id_col)
-         .orderBy(F.col("cosine").desc(), F.col("nbr_id")))
-    return (scored.withColumn("rnk", F.row_number().over(w))
-            .where(F.col("rnk") <= k)
-            .select(query_id_col, "nbr_id", "cosine", "rnk"))
+    return _rank_topk(pairs.select(query_id_col, "nbr_id", _cosine()),
+                      query_id_col, k)
 
 
 def hard_negatives(corpus: DataFrame, queries: DataFrame, k: int = 5,
@@ -141,31 +229,17 @@ def hard_negatives(corpus: DataFrame, queries: DataFrame, k: int = 5,
     candidate set. Reference surface: engine extension (the reference
     has no vector ops); gate ``sim_hard_negatives``.
     """
-    # per-row norm columns below the join — see :func:`cosine_topk`
-    c = corpus.select(F.col(id_col).alias("nbr_id"),
-                      F.col(label_col).alias("__nl"),
-                      F.transform(F.col(vec_col),
-                                  lambda v: v.cast("double")).alias("cv")) \
-              .withColumn("__cn", _norm(F.col("cv")))
-    q = queries.select(F.col(query_id_col),
-                       F.col(label_col).alias("__ql"),
-                       F.transform(F.col(vec_col),
-                                   lambda v: v.cast("double")).alias("qv")) \
-               .withColumn("__qn", _norm(F.col("qv")))
+    c = _vectors(corpus, id_col, vec_col, "a", id_as="nbr_id",
+                 keep=[F.col(label_col).alias("__nl")])
+    q = _vectors(queries, query_id_col, vec_col, "b",
+                 keep=[F.col(label_col).alias("__ql")])
     pairs = c.join(F.broadcast(q),
                    (F.col("nbr_id") != F.col(query_id_col))
                    & (F.col("__nl") != F.col("__ql")))
-    scored = pairs.select(
-        F.col(query_id_col), F.col("nbr_id"),
-        (_dot(F.col("cv"), F.col("qv"))
-         / (F.col("__cn") * F.col("__qn"))).alias("cosine"))
+    scored = pairs.select(query_id_col, "nbr_id", _cosine())
     if max_cosine is not None:
         scored = scored.where(F.col("cosine") <= float(max_cosine))
-    w = (Window.partitionBy(query_id_col)
-         .orderBy(F.col("cosine").desc(), F.col("nbr_id")))
-    return (scored.withColumn("rnk", F.row_number().over(w))
-            .where(F.col("rnk") <= k)
-            .select(query_id_col, "nbr_id", "cosine", "rnk"))
+    return _rank_topk(scored, query_id_col, k)
 
 
 def cosine_topk_arrow(corpus: DataFrame, queries: DataFrame, k: int = 5,
@@ -228,11 +302,7 @@ def cosine_topk_arrow(corpus: DataFrame, queries: DataFrame, k: int = 5,
     local = corpus.select(id_col, vec_col).mapInPandas(
         score, schema=f"{query_id_col} long, nbr_id long, cosine double")
     local = local.where(F.col("nbr_id") != F.col(query_id_col))
-    w = (Window.partitionBy(query_id_col)
-         .orderBy(F.col("cosine").desc(), F.col("nbr_id")))
-    return (local.withColumn("rnk", F.row_number().over(w))
-            .where(F.col("rnk") <= k)
-            .select(query_id_col, "nbr_id", "cosine", "rnk"))
+    return _rank_topk(local, query_id_col, k)
 
 
 def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
@@ -253,44 +323,11 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     and the result provably equals exact brute force — the operating
     point the correctness oracle pins.
     """
-    import numpy as np
-
-    rng = np.random.RandomState(seed)
-    dim = len(corpus.select(vec_col).first()[0])
-    hyper = rng.randn(planes, dim)
-
-    def bucket_expr(v):
-        # ``v`` is an already-cast double array COLUMN — the cast
-        # transform used to be inlined here, re-running once per
-        # plane fold (round-10)
-        bits = F.lit(0)
-        for p in range(planes):
-            proj = F.aggregate(
-                F.zip_with(v,
-                           F.array(*[F.lit(float(c)) for c in hyper[p]]),
-                           lambda x, y: x * y),
-                F.lit(0.0), lambda acc, t: acc + t)
-            bits = bits + F.when(proj > 0, F.lit(1 << p)).otherwise(0)
-        return bits
-
-    # cast vectors and their norms are per-ROW columns below the
-    # bucket join (round-10): the cosine above the join used to
-    # re-cast and re-fold both vectors once per candidate PAIR —
-    # identical IEEE values, ~60% fewer interpreted HOF evaluations
-    c = (corpus.select(F.col(id_col).alias("nbr_id"),
-                       F.transform(F.col(vec_col),
-                                   lambda x: x.cast("double"))
-                       .alias("cv"))
-         .select(F.col("nbr_id"), F.col("cv"),
-                 bucket_expr(F.col("cv")).alias("bucket"),
-                 _norm(F.col("cv")).alias("__cn")))
-    q = (queries.select(F.col(query_id_col),
-                        F.transform(F.col(vec_col),
-                                    lambda x: x.cast("double"))
-                        .alias("qv"))
-         .select(F.col(query_id_col), F.col("qv"),
-                 bucket_expr(F.col("qv")).alias("bucket"),
-                 _norm(F.col("qv")).alias("__qn")))
+    bits = _hyperplane_bits(corpus, vec_col, planes, seed)
+    c = (_vectors(corpus, id_col, vec_col, "a", id_as="nbr_id")
+         .withColumn("bucket", bits(F.col("__va"))))
+    q = (_vectors(queries, query_id_col, vec_col, "b")
+         .withColumn("bucket", bits(F.col("__vb"))))
     if multiprobe:
         # explode each query into its probe set: bucket XOR every mask
         # with popcount <= multiprobe (masks are distinct, so each
@@ -298,20 +335,13 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
         masks = [m for m in range(1 << planes)
                  if bin(m).count("1") <= multiprobe]
         q = q.select(
-            F.col(query_id_col), F.col("qv"), F.col("__qn"),
+            F.col(query_id_col), F.col("__vb"), F.col("__nb"),
             F.explode(F.array(*[F.col("bucket").bitwiseXOR(F.lit(m))
                                 for m in masks])).alias("bucket"))
     pairs = c.join(F.broadcast(q), "bucket").where(
         F.col("nbr_id") != F.col(query_id_col))
-    scored = pairs.select(
-        F.col(query_id_col), F.col("nbr_id"),
-        (_dot(F.col("cv"), F.col("qv"))
-         / (F.col("__cn") * F.col("__qn"))).alias("cosine"))
-    w = (Window.partitionBy(query_id_col)
-         .orderBy(F.col("cosine").desc(), F.col("nbr_id")))
-    return (scored.withColumn("rnk", F.row_number().over(w))
-            .where(F.col("rnk") <= k)
-            .select(query_id_col, "nbr_id", "cosine", "rnk"))
+    return _rank_topk(pairs.select(query_id_col, "nbr_id", _cosine()),
+                      query_id_col, k)
 
 
 def _cosine_candidates_blocks(df: DataFrame, threshold: float,
@@ -403,12 +433,8 @@ def _run_block_pairs(df: DataFrame, id_col: str, vec_col: str,
     (:func:`_cosine_candidates_blocks` and :func:`knn_graph`): hash
     rows into B blocks sized from ``rows_per_block`` AND the cluster
     parallelism, replicate each row into its B(B+1)/2 unordered block
-    pairs, and run ``emit(bi, bj, group_pdf)`` once per pair in a
-    fixed-N-repartitioned ``mapInPandas`` (explicit repartition + per-
-    partition grouping, NOT groupBy().applyInPandas(): the matmul work
-    per group far outweighs its shuffle bytes, so AQE's size-based
-    coalescing would squash the groups onto a handful of tasks and
-    serialize the compute). Replication invariant: partner p == blk
+    pairs, and run ``emit(bi, bj, group_pdf)`` once per pair through
+    :func:`_map_groups`. Replication invariant: partner p == blk
     contributes the diagonal group once; p != blk contributes
     (min, max) exactly once per side — no duplicate groups.
 
@@ -442,18 +468,9 @@ def _run_block_pairs(df: DataFrame, id_col: str, vec_col: str,
                 F.least("blk", "p").alias("bi"),
                 F.greatest("blk", "p").alias("bj")))
 
-    def partition_blocks(batches):
-        import pandas as pd
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True)
-        for (bi, bj), group in pdf.groupby(["bi", "bj"], sort=False):
-            yield emit(int(bi), int(bj), group)
-
-    npairs = nblocks * (nblocks + 1) // 2
-    return (rep.repartition(npairs, "bi", "bj")
-            .mapInPandas(partition_blocks, schema=schema))
+    return _map_groups(rep, ["bi", "bj"], nblocks * (nblocks + 1) // 2,
+                       lambda key, g: emit(int(key[0]), int(key[1]), g),
+                       schema)
 
 
 def _normalized_matrix(pdf, id_col: str, vec_col: str):
@@ -519,40 +536,25 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     partitions instead of scanning.
     """
     import numpy as np
-    from pyspark.sql import functions as F2
 
+    if corpus.isEmpty():
+        # KMeans.fit on zero rows throws; an empty corpus has nothing
+        # to prune, and the exact tier answers it (empty, same schema)
+        return cosine_topk(corpus, queries, k, id_col, vec_col,
+                           query_id_col)
     centers = np.array(_train_centers(corpus, vec_col, nlist, seed,
                                       max_iter=20))
-
-    # cast + assign from a materialized column, norms per ROW below
-    # the join (round-10): the inlined forms re-cast the vector per
-    # centroid distance and re-folded both norms per candidate pair
-    cv = F.transform(F.col(vec_col), lambda v: v.cast("double"))
-    c_assigned = (corpus.select(F.col(id_col).alias("nbr_id"),
-                                cv.alias("cv"))
-                  .select(F.col("nbr_id"), F.col("cv"),
-                          F.element_at(_nearest_lists(F.col("cv"), 1,
-                                                      centers), 1)
-                          .alias("list_id"),
-                          _norm(F.col("cv")).alias("__cn")))
-    qv = F.transform(F.col(vec_col), lambda v: v.cast("double"))
-    q_assigned = (queries.select(F.col(query_id_col), qv.alias("qv"))
-                  .select(F.col(query_id_col), F.col("qv"),
-                          F.explode(_nearest_lists(F.col("qv"), nprobe,
-                                                   centers))
-                          .alias("list_id"),
-                          _norm(F.col("qv")).alias("__qn")))
-    pairs = c_assigned.join(F2.broadcast(q_assigned), "list_id").where(
+    c = _vectors(corpus, id_col, vec_col, "a", id_as="nbr_id")
+    c = c.withColumn("list_id", F.element_at(
+        _nearest_lists(F.col("__va"), 1, centers), 1))
+    q = _vectors(queries, query_id_col, vec_col, "b")
+    q = q.select(query_id_col, "__vb", "__nb",
+                 F.explode(_nearest_lists(F.col("__vb"), nprobe, centers))
+                 .alias("list_id"))
+    pairs = c.join(F.broadcast(q), "list_id").where(
         F.col("nbr_id") != F.col(query_id_col))
-    scored = pairs.select(
-        F.col(query_id_col), F.col("nbr_id"),
-        (_dot(F.col("cv"), F.col("qv"))
-         / (F.col("__cn") * F.col("__qn"))).alias("cosine"))
-    w = (Window.partitionBy(query_id_col)
-         .orderBy(F.col("cosine").desc(), F.col("nbr_id")))
-    return (scored.withColumn("rnk", F.row_number().over(w))
-            .where(F.col("rnk") <= k)
-            .select(query_id_col, "nbr_id", "cosine", "rnk"))
+    return _rank_topk(pairs.select(query_id_col, "nbr_id", _cosine()),
+                      query_id_col, k)
 
 
 def cosine_dup_pairs(df: DataFrame, threshold: float = 0.95,
@@ -578,82 +580,32 @@ def cosine_dup_pairs(df: DataFrame, threshold: float = 0.95,
     - ``'lsh'``: random-hyperplane bucketed candidates (+ exact
       re-score). Cost ~n²/2^planes; recall < 1 by construction — the
       100 TB path when exactness can be traded.
-    - ``'cross'``: pure expression-fold cross join (tiny corpora; the
-      self-contained oracle tier).
 
     ``owned_frames`` (a list) collects the frames this call persists
     (the vector substrate shared by both pair-join sides) so a
     long-lived caller can unpersist them once the result is
     materialized (ADVICE r10).
     """
-    # per-row norm columns below the pair joins (round-10, same fix
-    # as :func:`cosine_topk`): ``_norm`` is an interpreted O(dim)
-    # fold, so folding it inside the per-PAIR cosine re-folded each
-    # vector once per candidate pair. Projected per ROW the fold runs
-    # once per vector; the (na * nb) product and division order are
-    # unchanged, so values stay IEEE-identical (oracle-gated).
-    v = (df.select(F.col(id_col),
-                   F.transform(F.col(vec_col),
-                               lambda x: x.cast("double")).alias("v"))
-         .withColumn("__n", _norm(F.col("v"))))
-    if method in ("block", "cross"):
-        # the substrate feeds BOTH sides of the pair join; without a
-        # persist the scan + cast + norm fold run once per alias
-        # (round-10 — same duplicate-subtree fix as the dedup sizes
-        # frames). The lsh branch caches ``ab`` (which adds the
-        # bucket-bit folds) instead, so the vectors are cached once.
-        v = v.persist()
-        if owned_frames is not None:
-            owned_frames.append(v)
-    a = v.select(F.col(id_col).alias("id_a"), F.col("v").alias("va"),
-                 F.col("__n").alias("__na"))
-    b = v.select(F.col(id_col).alias("id_b"), F.col("v").alias("vb"),
-                 F.col("__n").alias("__nb"))
+    if method not in ("block", "lsh"):
+        raise ValueError(f"unknown method: {method!r}")
+    v = _vectors(df, id_col, vec_col)
+    keep = ()
+    if method == "lsh":
+        # cached WITH the key: ``planes`` dot folds per row
+        bits = _hyperplane_bits(df, vec_col, planes, seed)
+        v = v.withColumn("bucket", bits(F.col("__v")))
+        keep = ("bucket",)
+    v = v.persist()
+    if owned_frames is not None:
+        owned_frames.append(v)
+    a, b = _pair_sides(v, id_col, ("id_a", "id_b"), keep)
     if method == "block":
         candidates = _cosine_candidates_blocks(df, threshold, id_col,
                                                vec_col, rows_per_block)
         pairs = candidates.join(a, "id_a").join(b, "id_b")
-    elif method == "lsh":
-        import numpy as np
-
-        rng = np.random.RandomState(seed)
-        dim = len(df.select(vec_col).first()[0])
-        hyper = rng.randn(planes, dim)
-
-        def bucket(vec):
-            bits = F.lit(0)
-            for p in range(planes):
-                proj = F.aggregate(
-                    F.zip_with(
-                        vec,
-                        F.array(*[F.lit(float(c)) for c in hyper[p]]),
-                        lambda x, y: x * y),
-                    F.lit(0.0), lambda acc, t: acc + t)
-                bits = bits + F.when(proj > 0, F.lit(1 << p)).otherwise(0)
-            return bits
-
-        # persist: the bucket bits are ``planes`` interpreted dot
-        # folds per row and ``ab`` feeds both sides of the self-join —
-        # without the cache the whole subtree runs twice (round-10).
-        ab = v.select(F.col(id_col), F.col("v"), F.col("__n"),
-                      bucket(F.col("v")).alias("bucket")).persist()
-        if owned_frames is not None:
-            owned_frames.append(ab)
-        pairs = (ab.select(F.col(id_col).alias("id_a"),
-                           F.col("v").alias("va"),
-                           F.col("__n").alias("__na"), "bucket")
-                 .join(ab.select(F.col(id_col).alias("id_b"),
-                                 F.col("v").alias("vb"),
-                                 F.col("__n").alias("__nb"), "bucket"),
-                       "bucket")
-                 .where(F.col("id_a") < F.col("id_b")))
-    elif method == "cross":
-        pairs = a.join(b, F.col("id_a") < F.col("id_b"))
     else:
-        raise ValueError(f"unknown method: {method!r}")
-    cosine = (_dot(F.col("va"), F.col("vb"))
-              / (F.col("__na") * F.col("__nb")))
-    return (pairs.select("id_a", "id_b", cosine.alias("cosine"))
+        pairs = a.join(b, "bucket").where(F.col("id_a") < F.col("id_b"))
+    return (pairs.select("id_a", "id_b", _cosine())
             .where(F.col("cosine") >= threshold))
 
 
@@ -741,33 +693,14 @@ def _exact_rescore_topk(df: DataFrame, cand: DataFrame, k: int,
     exact tail of the graph builders: the result is IEEE-exact and
     oracle-matchable regardless of which candidate superset the
     prefilter produced."""
-    # per-row norm columns below the pair joins (round-10): the fold
-    # runs once per vector row instead of once per candidate pair —
-    # identical IEEE value and association order, ~half the HOF work
-    vv = df.select(F.col(id_col),
-                   F.transform(F.col(vec_col),
-                               lambda x: x.cast("double")).alias("v"))
-    # persist: vv feeds both the src and nbr sides of the candidate
-    # re-attach joins — without the cache the scan + cast + norm fold
-    # run once per alias (round-10, same fix as cosine_dup_pairs).
-    vv = vv.withColumn("__n", _norm(F.col("v"))).persist()
+    vv = _vectors(df, id_col, vec_col).persist()
     if owned_frames is not None:
         owned_frames.append(vv)
-    a = vv.select(F.col(id_col).alias("src"), F.col("v").alias("va"),
-                  F.col("__n").alias("__na"))
-    b = vv.select(F.col(id_col).alias("nbr"), F.col("v").alias("vb"),
-                  F.col("__n").alias("__nb"))
-    cosine = (_dot(F.col("va"), F.col("vb"))
-              / (F.col("__na") * F.col("__nb")))
+    a, b = _pair_sides(vv, id_col, ("src", "nbr"))
     scored = (cand.join(a, "src").join(b, "nbr")
               .select(F.col("src").alias("src_id"),
-                      F.col("nbr").alias("nbr_id"),
-                      cosine.alias("cosine")))
-    w = (Window.partitionBy("src_id")
-         .orderBy(F.col("cosine").desc(), F.col("nbr_id")))
-    return (scored.withColumn("rnk", F.row_number().over(w))
-            .where(F.col("rnk") <= k)
-            .select("src_id", "nbr_id", "cosine", "rnk"))
+                      F.col("nbr").alias("nbr_id"), _cosine()))
+    return _rank_topk(scored, "src_id", k)
 
 
 def mutual_knn_pairs(df: DataFrame, k: int = 5,
@@ -988,7 +921,7 @@ def ivf_knn_graph(df: DataFrame, k: int = 5, nlist: int = 16,
         F.pmod(F.xxhash64(F.col(id_col)), F.lit(splits))
         .cast("int").alias("chunk"))
 
-    def cell_knn(pdf):
+    def cell_knn(_cell, pdf):
         import pandas as pd
         mat, ids, _ = _normalized_matrix(pdf, "vid", "vec")
         side = pdf["side"].to_numpy()
@@ -1001,23 +934,10 @@ def ivf_knn_graph(df: DataFrame, k: int = 5, nlist: int = 16,
         src, nbr = _matrix_topk(ids[s_idx], ids[n_idx], sims, k)
         return pd.DataFrame({"src": src, "nbr": nbr})
 
-    def partition_cells(batches):
-        # fixed-N repartition + per-partition grouping (the AQE
-        # rationale of the exact graph's block stage)
-        import pandas as pd
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True)
-        for _, group in pdf.groupby(["list_id", "chunk"], sort=False):
-            yield cell_knn(group)
-
-    cand = (srcs.unionByName(nbrs)
-            .repartition(int(nlist) * splits, "list_id", "chunk")
-            .mapInPandas(partition_cells, schema="src long, nbr long")
-            # a prober reaches the same neighbor through at most one
-            # (cell, its own chunk) task, so pairs are unique
-            )
+    # a prober reaches the same neighbor through at most one
+    # (cell, its own chunk) task, so pairs are unique
+    cand = _map_groups(srcs.unionByName(nbrs), ["list_id", "chunk"],
+                       int(nlist) * splits, cell_knn, "src long, nbr long")
     return _exact_rescore_topk(df, cand, k, id_col, vec_col,
                                owned_frames=owned_frames)
 
@@ -1080,10 +1000,7 @@ class IVFIndex:
             rows = spark.read.parquet(self._manifest_path()) \
                 .orderBy(F.col("seq").desc()).limit(1).collect()
         except Exception as exc:  # noqa: BLE001 - classify, don't blanket
-            text = f"{type(exc).__name__}: {exc}"
-            if ("PATH_NOT_FOUND" in text or "Path does not exist" in text
-                    or "UNABLE_TO_INFER_SCHEMA" in text
-                    or "Unable to infer schema" in text):
+            if _is_missing(exc):
                 raise FileNotFoundError(
                     f"no IVF index at {self.path!r} — call build() first"
                 ) from exc
@@ -1387,14 +1304,9 @@ class IVFIndex:
                 try:
                     old_book = self.pq_book(spark)
                 except Exception as exc:  # noqa: BLE001 - classify below
-                    msg = f"{type(exc).__name__}: {exc}"
-                    if ("PATH_NOT_FOUND" in msg
-                            or "Path does not exist" in msg
-                            or "UNABLE_TO_INFER_SCHEMA" in msg
-                            or "Unable to infer schema" in msg):
-                        old_book = None
-                    else:
+                    if not _is_missing(exc):
                         raise
+                    old_book = None
                 out["rebuilt"] = self.rebuild(corpus)
                 if old_book is not None:
                     out["pq"] = self.build_pq(spark, codebook=old_book)
@@ -1536,44 +1448,28 @@ class IVFIndex:
     def query(self, queries: DataFrame, k: int = 5,
               nprobe: int = 4,
               query_id_col: str = "query_id") -> DataFrame:
-        from pyspark.sql import functions as F2
-
         spark = queries.sparkSession
         # resolve the serving version ONCE; everything below reads that
         # version's immutable files — a concurrent rebuild can flip the
         # manifest mid-query without affecting this result
         vdir = self._version_path(self._current_vid(spark))
         centers = self._centers(spark, vdir)
-        # norms are per-ROW columns below the list join (round-10,
-        # same fix as :func:`cosine_topk`): the inlined per-pair form
-        # re-folded both vectors once per candidate pair — identical
-        # IEEE values, the fold runs once per row instead
-        qv = F.transform(F.col(self.vec_col), lambda v: v.cast("double"))
-        q_assigned = (queries.select(F.col(query_id_col), qv.alias("qv"))
-                      .select(F.col(query_id_col), F.col("qv"),
-                              F.explode(_nearest_lists(F.col("qv"),
-                                                       nprobe, centers))
-                              .alias("list_id"),
-                              _norm(F.col("qv")).alias("__qn"))).persist()
+        q_assigned = _vectors(queries, query_id_col, self.vec_col, "b")
+        q_assigned = q_assigned.select(
+            query_id_col, "__vb", "__nb",
+            F.explode(_nearest_lists(F.col("__vb"), nprobe, centers))
+            .alias("list_id")).persist()
         # which partitions this batch touches (≤ nlist values — tiny)
         needed = sorted(r["list_id"] for r in
                         q_assigned.select("list_id").distinct().collect())
-        corpus = (spark.read.parquet(f"{vdir}/lists")
-                  .where(F.col("list_id").isin(needed))
-                  .withColumn("__cn", _norm(F.col("cv"))))
-        pairs = (corpus.join(F2.broadcast(q_assigned), "list_id")
-                 .where(F.col(self.id_col) != F.col(query_id_col)))
-        scored = pairs.select(
-            F.col(query_id_col),
-            F.col(self.id_col).alias("nbr_id"),
-            (_dot(F.col("cv"), F.col("qv"))
-             / (F.col("__cn") * F.col("__qn"))).alias("cosine"))
-        w = (Window.partitionBy(query_id_col)
-             .orderBy(F.col("cosine").desc(), F.col("nbr_id")))
-        out = (scored.withColumn("rnk", F.row_number().over(w))
-               .where(F.col("rnk") <= k)
-               .select(query_id_col, "nbr_id", "cosine", "rnk")
-               .localCheckpoint(eager=True))
+        corpus = _vectors(spark.read.parquet(f"{vdir}/lists")
+                          .where(F.col("list_id").isin(needed)),
+                          self.id_col, "cv", "a", id_as="nbr_id",
+                          keep=("list_id",))
+        pairs = (corpus.join(F.broadcast(q_assigned), "list_id")
+                 .where(F.col("nbr_id") != F.col(query_id_col)))
+        out = _rank_topk(pairs.select(query_id_col, "nbr_id", _cosine()),
+                         query_id_col, k).localCheckpoint(eager=True)
         q_assigned.unpersist()
         return out
 
@@ -1750,11 +1646,10 @@ def semantic_dup_pairs(df: DataFrame, threshold: float = 0.95,
     connected_components` / ``leakage_safe_split(pairs=...)`` to
     group corpora by EMBEDDING similarity rather than n-gram overlap.
     """
-    cv = F.transform(F.col(vec_col), lambda v: v.cast("double"))
     if nlist <= 1:
         # exact operating point: one global cluster, no training
-        assigned = df.select(F.col(id_col), cv.alias("v"),
-                             F.lit(0).alias("list_id"))
+        assigned = _vectors(df, id_col, vec_col,
+                            keep=[F.lit(0).alias("list_id")])
     else:
         import numpy as np
         from pyspark.ml.clustering import KMeans
@@ -1775,32 +1670,17 @@ def semantic_dup_pairs(df: DataFrame, threshold: float = 0.95,
             .alias("features"))
         model = KMeans(k=nlist, seed=seed, maxIter=max_iter).fit(train)
         centers = np.array([np.asarray(c) for c in model.clusterCenters()])
-        # cast once into a materialized column (the inlined ``cv``
-        # expression used to re-run per use — round-10)
-        assigned = (df.select(F.col(id_col), cv.alias("v"))
-                    .select(F.col(id_col), F.col("v"),
-                            F.element_at(_nearest_lists(F.col("v"), 1,
-                                                        centers), 1)
-                            .alias("list_id")))
-    # per-row norm columns below the cluster self-join (round-10, same
-    # fix as :func:`cosine_topk`): the per-pair form re-folded both
-    # norms once per within-cluster pair — identical IEEE values
-    # persist: ``assigned`` feeds both sides of the within-cluster
-    # self-join, and its subtree carries the per-row nearest-centroid
-    # fold (nlist distance folds) plus the norm fold — without the
-    # cache all of it runs twice, once per alias (round-10).
-    assigned = assigned.withColumn("__n", _norm(F.col("v"))).persist()
+        assigned = _vectors(df, id_col, vec_col).withColumn(
+            "list_id",
+            F.element_at(_nearest_lists(F.col("__v"), 1, centers), 1))
+    # cached with the per-row nearest-centroid assignment
+    assigned = assigned.persist()
     if owned_frames is not None:
         owned_frames.append(assigned)
-    a = assigned.select(F.col("list_id"), F.col(id_col).alias("id_a"),
-                        F.col("v").alias("va"), F.col("__n").alias("__na"))
-    b = assigned.select(F.col("list_id"), F.col(id_col).alias("id_b"),
-                        F.col("v").alias("vb"), F.col("__n").alias("__nb"))
-    cosine = (_dot(F.col("va"), F.col("vb"))
-              / (F.col("__na") * F.col("__nb")))
+    a, b = _pair_sides(assigned, id_col, ("id_a", "id_b"), ("list_id",))
     return (a.join(b, "list_id")
             .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", cosine.alias("cosine"))
+            .select("id_a", "id_b", _cosine())
             .where(F.col("cosine") >= F.lit(float(threshold))))
 
 
@@ -2173,11 +2053,8 @@ def _adc_rank(pairs: DataFrame, m: int, k: int,
         dist = term if dist is None else dist + term
     scored = pairs.select(F.col(query_id_col), F.col("nbr_id"),
                           dist.alias("adist"))
-    w = (Window.partitionBy(query_id_col)
-         .orderBy(F.col("adist").asc(), F.col("nbr_id")))
-    return (scored.withColumn("rnk", F.row_number().over(w))
-            .where(F.col("rnk") <= int(k))
-            .select(query_id_col, "nbr_id", "adist", "rnk"))
+    return _rank_topk(scored, query_id_col, k, score="adist",
+                      ascending=True)
 
 
 def pq_topk(corpus: DataFrame, queries: DataFrame, codebook: list,

@@ -49,6 +49,10 @@ def test_operators_on_empty_corpus(spark):
     assert curation.sample_stratified(docs, 0.5).count() == 0
     assert curation.pack_sequences(docs, capacity=64).count() == 0
     assert similarity.cosine_dup_pairs(emb, 0.5).count() == 0
+    assert similarity.cosine_dup_pairs(emb, 0.5, method="lsh").count() == 0
+    q = emb.withColumnRenamed("vec_id", "query_id")
+    assert similarity.lsh_topk(emb, q).count() == 0
+    assert similarity.ivf_topk(emb, q, nlist=4).count() == 0
     assert dedup.dup_clusters(docs).count() == 0
     assert text.tfidf_top_terms(docs).count() == 0
     assert text.duplicate_spans(docs).count() == 0
