@@ -1,13 +1,22 @@
-"""Text-analysis operators for large-scale document pipelines.
+"""Text operators over a ``documents(doc_id, text, ...)`` table.
 
 Engine extension beyond the reference surface (per BASELINE.json north
-star): token statistics, quality scoring, heuristic language ID, and
-document fingerprinting over a ``documents(doc_id, text, ...)`` table.
+star): token statistics and quality scores, language ID, tokenization
+and chunking, cleaning, term statistics, fingerprints and exact dedup,
+and a bigram language model. Most are per-row ``Column`` expressions;
+the corpus-wide ones (dedup, term statistics, the LM) shuffle, and the
+three that wrap a Python library (normalize_text, bpe_tokenize,
+compression_ratio) run as Arrow UDFs.
 
-All operators are pure ``Column`` expressions — JVM-side, whole-stage
-codegen, no Python in the hot path — so they scale linearly with input
-and survive a 100 TB corpus unchanged: no shuffle, no UDF, predicate
-pushdown intact.
+The substring-dedup operators share one contract (Lee et al.,
+"Deduplicating Training Data Makes Language Models Better", done
+relationally): :func:`_gram_occurrences` gives each k-gram occurrence
+with its gram's corpus-first occurrence and count from one window over
+the gram hash; every later occurrence of a repeated gram is redundant
+(:func:`_cut_spans`); :func:`_islands` merges a document's windows into
+spans; :func:`_cut` rewrites the text without them. The line-dedup pair
+shares :func:`_line_occurrences` and :func:`_reassemble_lines`, the LM
+pair :func:`_word_bigrams` and :func:`_lidstone_logprob`.
 
 Determinism note: every ratio is ``int/int`` division in double (exact
 inputs → IEEE-deterministic output), so results hash-match the DuckDB
@@ -16,7 +25,7 @@ oracle bit-for-bit.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from .stored import CommitLog
 
@@ -476,12 +485,132 @@ def tfidf_top_terms(df: DataFrame, id_col: str = "doc_id",
                   F.col("tf")
                   * (F.log((F.lit(float(n_docs)) + 1.0)
                            / (F.col("df") + 1.0)) + 1.0)))
-    from pyspark.sql import Window
     w = (Window.partitionBy(id_col)
          .orderBy(F.col("tfidf").desc(), F.col("term").asc()))
     return (scored.withColumn("rnk", F.row_number().over(w))
             .where(F.col("rnk") <= k)
             .select(id_col, "term", "tf", "df", "tfidf", "rnk"))
+
+
+def _occurrence(id_col: str) -> Column:
+    """A gram occurrence as a (doc, pos) struct — the total order that
+    decides which occurrence of a gram is the corpus-first one."""
+    return F.struct(F.col(id_col).alias("d"), F.col("pos").alias("p"))
+
+
+def _gram_occurrences(df: DataFrame, id_col: str, text_col: str,
+                      k: int) -> tuple[DataFrame, DataFrame]:
+    """The k-gram inventory of the substring-dedup family: ``(docs,
+    occ)``. ``docs`` is (id, text, t) for every input row, ``t`` its
+    token array. ``occ`` has one row per ``k``-gram occurrence in a doc
+    of at least ``k`` tokens: (id, pos, end, h, first_occ, n_occ) with
+    1-based ``pos``, exclusive ``end = pos + k``, the gram's corpus-first
+    occurrence ``first_occ`` (:func:`_occurrence` order) and its
+    corpus-wide occurrence count ``n_occ``.
+
+    The gram key ``h`` is xxhash64 of the gram — the 8-byte shuffle
+    key; grouping by the hash equals grouping by the string up to
+    ~2⁻⁶⁴ collisions. Both gram statistics come from ONE window over
+    ``h``: it reads the exploded inventory once, where a count/min
+    aggregate joined back reads it twice (1.3–1.8× slower on sf0.1
+    documents, 4 local cores). In either form every occurrence of a
+    hot gram lands in one task.
+    """
+    k = int(k)
+    if k < 1:
+        raise ValueError("k must be >= 1")
+    docs = df.select(F.col(id_col), F.col(text_col),
+                     _tokens(text_col).alias("t"))
+    idx = F.sequence(F.lit(1), F.size(F.col("t")) - (k - 1))
+    wg = Window.partitionBy("h")
+    occ = (docs.where(F.size("t") >= k)
+           .select(F.col(id_col), F.explode(F.transform(
+               idx,
+               lambda i: F.struct(
+                   i.cast("long").alias("pos"),
+                   F.xxhash64(F.concat_ws(" ", F.slice(F.col("t"), i, k)))
+                   .alias("h")))).alias("g"))
+           .select(F.col(id_col), F.col("g.pos"),
+                   (F.col("g.pos") + k).alias("end"), F.col("g.h"))
+           .withColumn("first_occ", F.min(_occurrence(id_col)).over(wg))
+           .withColumn("n_occ", F.count(F.lit(1)).over(wg)))
+    return docs, occ
+
+
+def _islands(occ: DataFrame, id_col: str, *aggs: Column) -> DataFrame:
+    """Gaps-and-islands merge of each document's ``[pos, end)``
+    windows: a running max of ``end`` keyed by doc id starts a new
+    island wherever a window begins past every earlier one, and one
+    aggregate per island gives (id, span_start, span_end, n_dup_grams,
+    *aggs). Skew-bounded by document length."""
+    w = Window.partitionBy(id_col).orderBy("pos")
+    prev = w.rowsBetween(Window.unboundedPreceding, -1)
+    run = w.rowsBetween(Window.unboundedPreceding, 0)
+    return (occ
+            .withColumn("prev_max", F.max("end").over(prev))
+            .withColumn("ni",
+                        F.when(F.col("prev_max").isNull()
+                               | (F.col("pos") > F.col("prev_max")),
+                               1).otherwise(0))
+            .withColumn("island", F.sum("ni").over(run))
+            .groupBy(id_col, "island")
+            .agg(F.min("pos").alias("span_start"),
+                 F.max("end").alias("span_end"),
+                 F.count(F.lit(1)).alias("n_dup_grams"), *aggs)
+            .drop("island"))
+
+
+def _cut_spans(df: DataFrame, id_col: str, text_col: str, k: int,
+               min_count: int) -> tuple[DataFrame, DataFrame]:
+    """``(docs, spans)``: the spans :func:`remove_duplicate_spans` cuts,
+    with their provenance. An occurrence is *redundant* when its gram
+    occurs at least ``min_count`` times and an earlier occurrence
+    exists corpus-wide; (doc, pos) is a total order, so exactly one
+    occurrence per gram survives and the result is deterministic.
+    ``spans`` is (id, span_start, span_end, n_dup_grams, src_doc_id,
+    src_pos, n_src_docs): src_* is the keeper of the span's first
+    k-gram, n_src_docs the number of distinct documents the span's
+    grams originate from (a stitched span can splice several
+    sources)."""
+    docs, occ = _gram_occurrences(df, id_col, text_col, k)
+    redundant = occ.where((F.col("n_occ") >= min_count)
+                          & (_occurrence(id_col) > F.col("first_occ")))
+    return docs, _islands(
+        redundant, id_col,
+        F.min_by("first_occ.d", "pos").alias("src_doc_id"),
+        F.min_by("first_occ.p", "pos").alias("src_pos"),
+        F.count_distinct("first_occ.d").alias("n_src_docs"))
+
+
+def _cut(docs: DataFrame, spans: DataFrame, id_col: str,
+         text_col: str) -> DataFrame:
+    """Rebuild every document of ``docs`` without the tokens inside
+    its ``spans`` → (id, text, n_tokens_cut). Each document row
+    carries its own cut-span array, so the rewrite is a JVM-side
+    higher-order filter, not a join explosion. A document without a
+    span (shorter than k, nothing redundant, or NULL text) keeps its
+    text — re-joined from its own tokens, which is the same string —
+    and cuts 0 tokens."""
+    cuts = (spans.groupBy(id_col)
+            .agg(F.collect_list(F.struct(F.col("span_start").alias("s"),
+                                         F.col("span_end").alias("e")))
+                 .alias("cuts")))
+    kept = F.filter(
+        F.transform(
+            F.sequence(F.lit(1), F.size("t")),
+            lambda i: F.when(
+                ~F.exists(F.col("cuts"),
+                          lambda c: (i >= c["s"]) & (i < c["e"])),
+                F.element_at(F.col("t"), i))),
+        lambda x: x.isNotNull())
+    return (docs.join(cuts, id_col, "left")
+            .withColumn("cuts", F.coalesce(
+                "cuts", F.array().cast("array<struct<s:long,e:long>>")))
+            .select(F.col(id_col),
+                    F.array_join(kept, " ").alias(text_col),
+                    F.aggregate("cuts", F.lit(0).cast("long"),
+                                lambda acc, c: acc + (c["e"] - c["s"]))
+                    .alias("n_tokens_cut")))
 
 
 def duplicate_spans(df: DataFrame, id_col: str = "doc_id",
@@ -500,47 +629,12 @@ def duplicate_spans(df: DataFrame, id_col: str = "doc_id",
     (gaps-and-islands). Downstream, the spans drive cut-or-drop
     decisions just like the suffix-array pipeline's.
 
-    Scale shape: one explode of k-gram *hashes* (xxhash64 — the 8-byte
-    shuffle key; grouping by the hash equals grouping by the string up
-    to ~2⁻⁶⁴ collisions), a corpus-wide count on that key, one hash
-    join back (no broadcast assumption: hot-gram sets can be huge on
-    crawl data), then a per-document window merge — keyed by doc id,
-    skew-bounded by document length.
+    Scale shape: the shared k-gram occurrence window
+    (:func:`_gram_occurrences`, keyed by the 8-byte gram hash), then a
+    per-document island merge keyed by doc id.
     """
-    toks = F.split(F.col(text_col), " ")
-    base = df.select(F.col(id_col), toks.alias("t")) \
-             .where(F.size("t") >= k)
-    idx = F.sequence(F.lit(1), F.size(F.col("t")) - (k - 1))
-    grams = (base.select(
-        F.col(id_col),
-        F.explode(F.transform(
-            idx,
-            lambda i: F.struct(
-                i.cast("long").alias("pos"),
-                F.xxhash64(F.concat_ws(" ", F.slice(F.col("t"), i, k)))
-                .alias("h")))).alias("g"))
-        .select(F.col(id_col), F.col("g.pos"), F.col("g.h")))
-    hot = (grams.groupBy("h").agg(F.count(F.lit(1)).alias("c"))
-           .where(F.col("c") >= min_count).select("h"))
-    pos = (grams.join(hot, "h")
-           .select(F.col(id_col), "pos",
-                   (F.col("pos") + k).alias("end")))
-    from pyspark.sql import Window
-    w = Window.partitionBy(id_col).orderBy("pos")
-    prev = w.rowsBetween(Window.unboundedPreceding, -1)
-    run = w.rowsBetween(Window.unboundedPreceding, 0)
-    spans = (pos
-             .withColumn("prev_max", F.max("end").over(prev))
-             .withColumn("ni",
-                         F.when(F.col("prev_max").isNull()
-                                | (F.col("pos") > F.col("prev_max")),
-                                1).otherwise(0))
-             .withColumn("island", F.sum("ni").over(run)))
-    return (spans.groupBy(id_col, "island")
-            .agg(F.min("pos").alias("span_start"),
-                 F.max("end").alias("span_end"),
-                 F.count(F.lit(1)).alias("n_dup_grams"))
-            .select(id_col, "span_start", "span_end", "n_dup_grams"))
+    _, occ = _gram_occurrences(df, id_col, text_col, k)
+    return _islands(occ.where(F.col("n_occ") >= min_count), id_col)
 
 
 def remove_duplicate_spans(df: DataFrame, id_col: str = "doc_id",
@@ -555,80 +649,44 @@ def remove_duplicate_spans(df: DataFrame, id_col: str = "doc_id",
     total order, so exactly one occurrence per gram survives and the
     result is deterministic). Redundant windows merge into cut spans
     per document; tokens inside a cut span are dropped and the text is
-    rebuilt from the survivors. Output: (id, text, n_tokens_cut).
+    rebuilt from the survivors. Output: (id, text, n_tokens_cut);
+    documents shorter than ``k`` tokens or with NULL text pass through
+    with 0 tokens cut.
 
-    Scale shape: the same k-gram-hash inventory as
-    :func:`duplicate_spans` plus one min-occurrence window keyed by the
-    8-byte gram hash (skew-capped by gram frequency), a per-document
+    Scale shape: the shared k-gram occurrence window, a per-document
     interval merge, and a JVM-side higher-order filter to rebuild the
-    text — the document row carries its own cut-span array, so the
-    rewrite is a map, not a join explosion.
+    text (:func:`_cut`).
     """
-    toks = F.split(F.col(text_col), " ")
-    base = df.select(F.col(id_col), F.col(text_col), toks.alias("t"))
-    short = base.where(F.size("t") < k)
-    long_ = base.where(F.size("t") >= k)
-    idx = F.sequence(F.lit(1), F.size(F.col("t")) - (k - 1))
-    grams = (long_.select(
+    return _cut(*_cut_spans(df, id_col, text_col, k, min_count),
+                id_col, text_col)
+
+
+def _word_bigrams(df: DataFrame, id_col: str,
+                  text_col: str) -> tuple[DataFrame, DataFrame]:
+    """``(big, base)`` for the bigram LM: ``base`` is (id, t) of every
+    document with at least 2 tokens, ``big`` one (id, w1, w2) row per
+    adjacent token pair of those documents."""
+    base = df.select(F.col(id_col), _tokens(text_col).alias("t")) \
+             .where(F.size("t") >= 2)
+    idx = F.sequence(F.lit(1), F.size(F.col("t")) - 1)
+    big = (base.select(
         F.col(id_col),
         F.explode(F.transform(
             idx,
             lambda i: F.struct(
-                i.cast("long").alias("pos"),
-                F.xxhash64(F.concat_ws(" ", F.slice(F.col("t"), i, k)))
-                .alias("h")))).alias("g"))
-        .select(F.col(id_col), F.col("g.pos"), F.col("g.h")))
-    from pyspark.sql import Window
-    wg = Window.partitionBy("h")
-    # the gram's first occurrence corpus-wide, as a (doc, pos) pair
-    first = (grams
-             .withColumn("first_id", F.min(F.struct(F.col(id_col),
-                                                    F.col("pos"))).over(wg))
-             .withColumn("n_occ", F.count(F.lit(1)).over(wg)))
-    redundant = (first
-                 .where((F.col("n_occ") >= min_count)
-                        & ~((F.col(f"first_id.{id_col}") == F.col(id_col))
-                            & (F.col("first_id.pos") == F.col("pos"))))
-                 .select(F.col(id_col), "pos",
-                         (F.col("pos") + k).alias("end")))
-    wd = Window.partitionBy(id_col).orderBy("pos")
-    prev = wd.rowsBetween(Window.unboundedPreceding, -1)
-    run = wd.rowsBetween(Window.unboundedPreceding, 0)
-    spans = (redundant
-             .withColumn("prev_max", F.max("end").over(prev))
-             .withColumn("ni",
-                         F.when(F.col("prev_max").isNull()
-                                | (F.col("pos") > F.col("prev_max")),
-                                1).otherwise(0))
-             .withColumn("island", F.sum("ni").over(run))
-             .groupBy(id_col, "island")
-             .agg(F.min("pos").alias("s"), F.max("end").alias("e"))
-             .groupBy(id_col)
-             .agg(F.collect_list(F.struct("s", "e")).alias("cuts")))
-    rebuilt = (long_.join(spans, id_col, "left")
-               .withColumn("cuts", F.coalesce(
-                   "cuts", F.array().cast("array<struct<s:long,e:long>>")))
-               .select(
-                   F.col(id_col),
-                   F.array_join(
-                       F.filter(
-                           F.transform(
-                               F.sequence(F.lit(1), F.size("t")),
-                               lambda i: F.when(
-                                   ~F.exists(
-                                       F.col("cuts"),
-                                       lambda c: (i >= c["s"])
-                                       & (i < c["e"])),
-                                   F.element_at(F.col("t"), i))),
-                           lambda x: x.isNotNull()),
-                       " ").alias(text_col),
-                   F.aggregate(
-                       "cuts", F.lit(0).cast("long"),
-                       lambda acc, c: acc + (c["e"] - c["s"]))
-                   .alias("n_tokens_cut")))
-    return rebuilt.unionByName(
-        short.select(F.col(id_col), F.col(text_col),
-                     F.lit(0).cast("long").alias("n_tokens_cut")))
+                F.element_at(F.col("t"), i).alias("w1"),
+                F.element_at(F.col("t"), i + 1).alias("w2")))).alias("b"))
+        .select(F.col(id_col), F.col("b.w1"), F.col("b.w2")))
+    return big, base
+
+
+def _lidstone_logprob(alpha: float, v: int) -> Column:
+    """Lidstone-smoothed bigram log-probability over the count columns
+    ``c2`` (bigram) and ``c1`` (history) of a vocabulary of ``v``
+    words: ``ln((c2 + α) / (c1 + α·v))``, a missing count read as 0."""
+    a = float(alpha)
+    return F.log((F.coalesce(F.col("c2"), F.lit(0)) + F.lit(a))
+                 / (F.coalesce(F.col("c1"), F.lit(0)) + F.lit(a * v)))
 
 
 def bigram_logprob(df: DataFrame, id_col: str = "doc_id",
@@ -666,27 +724,14 @@ def bigram_logprob(df: DataFrame, id_col: str = "doc_id",
     so ``-Σq`` is positive where the two conventions coincide.
     Output: (id, n_bigrams, sum_lp_q BIGINT, nlp_q BIGINT).
     """
-    toks = F.split(F.col(text_col), " ")
-    base = df.select(F.col(id_col), toks.alias("t")) \
-             .where(F.size("t") >= 2)
-    idx = F.sequence(F.lit(1), F.size(F.col("t")) - 1)
-    big = (base.select(
-        F.col(id_col),
-        F.explode(F.transform(
-            idx,
-            lambda i: F.struct(
-                F.element_at(F.col("t"), i).alias("w1"),
-                F.element_at(F.col("t"), i + 1).alias("w2")))).alias("b"))
-        .select(F.col(id_col), F.col("b.w1"), F.col("b.w2"))
-        .persist())
+    big, base = _word_bigrams(df, id_col, text_col)
+    big = big.persist()
     vocab_size = (base.select(F.explode("t").alias("w"))
                   .select("w").distinct().count())
     hist = big.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
     pair = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
-    lp = (F.log((F.col("c2") + F.lit(float(alpha)))
-                / (F.col("c1") + F.lit(float(alpha) * vocab_size))))
     scored = big.join(pair, ["w1", "w2"]).join(hist, "w1") \
-                .withColumn("lp", lp)
+                .withColumn("lp", _lidstone_logprob(alpha, vocab_size))
     if quantized:
         out = (scored
                .withColumn("q", F.floor(F.col("lp")
@@ -736,6 +781,10 @@ def winnow_fingerprints(df: DataFrame, id_col: str = "doc_id",
     min window, both keyed by doc id; the fingerprint set is ~2/(w+1)
     of gram positions, constant-factor smaller than the input.
     """
+    if int(k) < 1:
+        raise ValueError("k must be >= 1")
+    if int(w) < 1:
+        raise ValueError("w must be >= 1")
     toks = F.split(F.col(text_col), " ")
     base = df.select(F.col(id_col), toks.alias("t")) \
              .where(F.size("t") >= k + w - 1)
@@ -749,7 +798,6 @@ def winnow_fingerprints(df: DataFrame, id_col: str = "doc_id",
                          F.md5(gram), 1, 15), 16, 16), 15, "0"),
                          F.lpad(F.col("i").cast("string"), 8, "0"))
                      .alias("key")))
-    from pyspark.sql import Window
     wd = Window.partitionBy(id_col)
     ws = (Window.partitionBy(id_col).orderBy("pos")
           .rowsBetween(Window.currentRow, w - 1))
@@ -844,56 +892,10 @@ def span_provenance(df: DataFrame, id_col: str = "doc_id",
     span's grams originate from (a stitched span can splice several
     sources).
 
-    Scale shape: the :func:`duplicate_spans` inventory plus one
-    min-aggregate keyed on the 8-byte gram hash (the keeper table) and
-    the same per-document island merge — no new shuffle class.
+    Scale shape: the same occurrence window and island merge as
+    :func:`remove_duplicate_spans` — no new shuffle class.
     """
-    toks = F.split(F.col(text_col), " ")
-    base = df.select(F.col(id_col), toks.alias("t")) \
-             .where(F.size("t") >= k)
-    idx = F.sequence(F.lit(1), F.size(F.col("t")) - (k - 1))
-    grams = (base.select(
-        F.col(id_col),
-        F.explode(F.transform(
-            idx,
-            lambda i: F.struct(
-                i.cast("long").alias("pos"),
-                F.xxhash64(F.concat_ws(" ", F.slice(F.col("t"), i, k)))
-                .alias("h")))).alias("g"))
-        .select(F.col(id_col), F.col("g.pos"), F.col("g.h")))
-    counts = grams.groupBy("h").agg(F.count(F.lit(1)).alias("c"))
-    occ_struct = F.struct(F.col(id_col).alias("d"), F.col("pos").alias("p"))
-    keeper = (grams.groupBy("h")
-              .agg(F.min(occ_struct).alias("first_occ")))
-    redundant = (grams
-                 .join(counts.where(F.col("c") >= min_count)
-                       .select("h"), "h")
-                 .join(keeper, "h")
-                 .where(occ_struct > F.col("first_occ"))
-                 .select(F.col(id_col), "pos",
-                         (F.col("pos") + k).alias("end"),
-                         F.col("first_occ.d").alias("src_d"),
-                         F.col("first_occ.p").alias("src_p")))
-    from pyspark.sql import Window
-    w = Window.partitionBy(id_col).orderBy("pos")
-    prev = w.rowsBetween(Window.unboundedPreceding, -1)
-    run = w.rowsBetween(Window.unboundedPreceding, 0)
-    spans = (redundant
-             .withColumn("prev_max", F.max("end").over(prev))
-             .withColumn("ni",
-                         F.when(F.col("prev_max").isNull()
-                                | (F.col("pos") > F.col("prev_max")),
-                                1).otherwise(0))
-             .withColumn("island", F.sum("ni").over(run)))
-    return (spans.groupBy(id_col, "island")
-            .agg(F.min("pos").alias("span_start"),
-                 F.max("end").alias("span_end"),
-                 F.count(F.lit(1)).alias("n_dup_grams"),
-                 F.min_by("src_d", "pos").alias("src_doc_id"),
-                 F.min_by("src_p", "pos").alias("src_pos"),
-                 F.count_distinct("src_d").alias("n_src_docs"))
-            .select(id_col, "span_start", "span_end", "n_dup_grams",
-                    "src_doc_id", "src_pos", "n_src_docs"))
+    return _cut_spans(df, id_col, text_col, k, min_count)[1]
 
 
 def chunk_text(df: DataFrame, chunk_tokens: int = 128,
@@ -952,101 +954,20 @@ def rewrite_with_provenance(df: DataFrame, id_col: str = "doc_id",
 
     Pipelines that want both the cut corpus and the audit trail would
     otherwise run the k-gram explode, the corpus-wide first-occurrence
-    aggregate, and the per-document interval merge twice — this shares
+    window, and the per-document interval merge twice — this shares
     all three (the merged-span frame is persisted and serves both
     outputs), halving the heavy stages. Results are identical to the
-    two separate operators by construction (same redundancy rule: every
-    occurrence after the corpus-first one in (doc, pos) order, same
-    gaps-and-islands merge); ``tests/`` pins the equivalence.
+    two separate operators by construction (both are the same
+    :func:`_cut_spans` frame); ``tests/`` pins the equivalence.
 
-    ``owned_frames`` collects the persisted intermediates (gram
-    inventory + merged spans) for release once both outputs are
-    materialized.
+    ``owned_frames`` collects the persisted merged-span frame for
+    release once both outputs are materialized.
     """
-    toks = F.split(F.col(text_col), " ")
-    base = df.select(F.col(id_col), F.col(text_col), toks.alias("t"))
-    short = base.where(F.size("t") < k)
-    long_ = base.where(F.size("t") >= k)
-    idx = F.sequence(F.lit(1), F.size(F.col("t")) - (k - 1))
-    grams = (long_.select(
-        F.col(id_col),
-        F.explode(F.transform(
-            idx,
-            lambda i: F.struct(
-                i.cast("long").alias("pos"),
-                F.xxhash64(F.concat_ws(" ", F.slice(F.col("t"), i, k)))
-                .alias("h")))).alias("g"))
-        .select(F.col(id_col), F.col("g.pos"), F.col("g.h"))
-        .persist())
-    if owned_frames is not None:
-        owned_frames.append(grams)
-    occ_struct = F.struct(F.col(id_col).alias("d"),
-                          F.col("pos").alias("p"))
-    stats = (grams.groupBy("h")
-             .agg(F.min(occ_struct).alias("first_occ"),
-                  F.count(F.lit(1)).alias("n_occ")))
-    redundant = (grams
-                 .join(stats.where(F.col("n_occ") >= min_count), "h")
-                 .where(occ_struct > F.col("first_occ"))
-                 .select(F.col(id_col), "pos",
-                         (F.col("pos") + k).alias("end"),
-                         F.col("first_occ.d").alias("src_d"),
-                         F.col("first_occ.p").alias("src_p")))
-    from pyspark.sql import Window
-    w = Window.partitionBy(id_col).orderBy("pos")
-    prev = w.rowsBetween(Window.unboundedPreceding, -1)
-    run = w.rowsBetween(Window.unboundedPreceding, 0)
-    spans = (redundant
-             .withColumn("prev_max", F.max("end").over(prev))
-             .withColumn("ni",
-                         F.when(F.col("prev_max").isNull()
-                                | (F.col("pos") > F.col("prev_max")),
-                                1).otherwise(0))
-             .withColumn("island", F.sum("ni").over(run))
-             .groupBy(id_col, "island")
-             .agg(F.min("pos").alias("span_start"),
-                  F.max("end").alias("span_end"),
-                  F.count(F.lit(1)).alias("n_dup_grams"),
-                  F.min_by("src_d", "pos").alias("src_doc_id"),
-                  F.min_by("src_p", "pos").alias("src_pos"),
-                  F.count_distinct("src_d").alias("n_src_docs"))
-             .persist())
+    docs, spans = _cut_spans(df, id_col, text_col, k, min_count)
+    spans = spans.persist()
     if owned_frames is not None:
         owned_frames.append(spans)
-    provenance = spans.select(id_col, "span_start", "span_end",
-                              "n_dup_grams", "src_doc_id", "src_pos",
-                              "n_src_docs")
-    cuts = (spans.select(F.col(id_col),
-                         F.struct(F.col("span_start").alias("s"),
-                                  F.col("span_end").alias("e"))
-                         .alias("cut"))
-            .groupBy(id_col)
-            .agg(F.collect_list("cut").alias("cuts")))
-    rebuilt = (long_.join(cuts, id_col, "left")
-               .withColumn("cuts", F.coalesce(
-                   "cuts", F.array().cast("array<struct<s:long,e:long>>")))
-               .select(
-                   F.col(id_col),
-                   F.array_join(
-                       F.filter(
-                           F.transform(
-                               F.sequence(F.lit(1), F.size("t")),
-                               lambda i: F.when(
-                                   ~F.exists(
-                                       F.col("cuts"),
-                                       lambda c: (i >= c["s"])
-                                       & (i < c["e"])),
-                                   F.element_at(F.col("t"), i))),
-                           lambda x: x.isNotNull()),
-                       " ").alias(text_col),
-                   F.aggregate(
-                       "cuts", F.lit(0).cast("long"),
-                       lambda acc, c: acc + (c["e"] - c["s"]))
-                   .alias("n_tokens_cut")))
-    rewritten = rebuilt.unionByName(
-        short.select(F.col(id_col), F.col(text_col),
-                     F.lit(0).cast("long").alias("n_tokens_cut")))
-    return rewritten, provenance
+    return _cut(docs, spans, id_col, text_col), spans
 
 
 def _bpe_apply_merge(symbols, left: str, right: str):
@@ -1180,6 +1101,53 @@ def bpe_tokenize(df: DataFrame, merges: list[tuple[str, str]],
                "n_tokens int")
 
 
+def _line_occurrences(df: DataFrame, id_col: str, text_col: str,
+                      sep: str, min_tokens: int
+                      ) -> tuple[DataFrame, DataFrame]:
+    """``(lines, firsts)`` of the line-dedup family. ``lines`` is one
+    (id, pos, line, __elig) row per ``sep``-split line; a line is
+    eligible when it is non-empty and has at least ``min_tokens``
+    tokens. ``firsts`` is (line, __first): each eligible line's
+    corpus-first (id, pos), as an aggregate — see :func:`line_dedup`
+    for why not a window."""
+    lines = df.select(
+        F.col(id_col),
+        F.posexplode(F.split(F.col(text_col), sep)).alias("pos", "line"))
+    elig = (F.length(F.col("line")) > 0) \
+        & (F.size(_tokens("line")) >= F.lit(int(min_tokens)))
+    lines = lines.withColumn("__elig", elig)
+    firsts = (lines.where("__elig")
+              .groupBy("line")
+              .agg(F.min(F.struct(id_col, "pos")).alias("__first")))
+    return lines, firsts
+
+
+def _reassemble_lines(lines: DataFrame, firsts: DataFrame, id_col: str,
+                      text_col: str, join_sep: str) -> DataFrame:
+    """Keep every exempt line and every line that is its own keeper in
+    ``firsts`` (a line missing from ``firsts`` is cut), then rebuild
+    each document from its kept lines in order → (id, text, n_lines,
+    n_kept)."""
+    keep = (~F.col("__elig")) | (
+        F.col("__first").isNotNull()
+        & (F.col(f"__first.{id_col}") == F.col(id_col))
+        & (F.col("__first.pos") == F.col("pos")))
+    out = (lines.join(firsts, "line", "left")
+           .withColumn("__keep", keep)
+           .groupBy(id_col)
+           .agg(F.count(F.lit(1)).alias("n_lines"),
+                F.sum((F.col("__elig") & F.col("__keep"))
+                      .cast("long")).alias("n_kept"),
+                F.array_sort(F.collect_list(
+                    F.when(F.col("__keep"),
+                           F.struct("pos", "line")))).alias("__ls")))
+    return out.select(
+        F.col(id_col),
+        F.array_join(F.transform(F.col("__ls"), lambda s: s["line"]),
+                     join_sep).alias(text_col),
+        "n_lines", "n_kept")
+
+
 def line_dedup(df: DataFrame, id_col: str = "doc_id",
                text_col: str = "text", sep: str = "\n",
                min_tokens: int = 1,
@@ -1220,33 +1188,10 @@ def line_dedup(df: DataFrame, id_col: str = "doc_id",
     to reassemble (defaults to ``sep``, correct whenever ``sep`` has
     no regex metacharacters — pass it explicitly otherwise).
     """
-    toks_per_line = F.size(F.split(F.col("line"), " "))
-    lines = df.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), sep)).alias("pos", "line"))
-    elig = (F.length(F.col("line")) > 0) \
-        & (toks_per_line >= F.lit(int(min_tokens)))
-    lines = lines.withColumn("__elig", elig)
-    firsts = (lines.where("__elig")
-              .groupBy("line")
-              .agg(F.min(F.struct(id_col, "pos")).alias("__first")))
-    joined = lines.join(firsts, "line", "left")
-    keep = (~F.col("__elig")) | (
-        (F.col(f"__first.{id_col}") == F.col(id_col))
-        & (F.col("__first.pos") == F.col("pos")))
-    marked = joined.withColumn("__keep", keep)
-    out = (marked.groupBy(id_col)
-           .agg(F.count(F.lit(1)).alias("n_lines"),
-                F.sum((F.col("__elig") & F.col("__keep"))
-                      .cast("long")).alias("n_kept"),
-                F.array_sort(F.collect_list(
-                    F.when(F.col("__keep"),
-                           F.struct("pos", "line")))).alias("__ls")))
-    text_out = F.array_join(
-        F.transform(F.col("__ls"), lambda s: s["line"]),
-        join_sep if join_sep is not None else sep)
-    return out.select(F.col(id_col), text_out.alias(text_col),
-                      "n_lines", "n_kept")
+    lines, firsts = _line_occurrences(df, id_col, text_col, sep,
+                                      min_tokens)
+    return _reassemble_lines(lines, firsts, id_col, text_col,
+                             join_sep if join_sep is not None else sep)
 
 
 class IncrementalLineDeduper:
@@ -1305,39 +1250,14 @@ class IncrementalLineDeduper:
         exactly-once to the state)."""
         spark = docs.sparkSession
         id_col = self.id_col
-        lines = docs.select(
-            F.col(id_col),
-            F.posexplode(F.split(F.col(self.text_col), self.sep))
-            .alias("pos", "line"))
-        elig = (F.length(F.col("line")) > 0) \
-            & (F.size(F.split(F.col("line"), " "))
-               >= F.lit(int(self.min_tokens)))
-        lines = lines.withColumn("__elig", elig)
-        firsts = (lines.where("__elig")
-                  .groupBy("line")
-                  .agg(F.min(F.struct(id_col, "pos")).alias("__first")))
+        lines, firsts = _line_occurrences(docs, id_col, self.text_col,
+                                          self.sep, self.min_tokens)
         seen = self.seen_lines(spark).select("line").distinct()
         new_firsts = firsts.join(seen, "line", "left_anti") \
             .localCheckpoint(eager=True)
-        joined = lines.join(new_firsts, "line", "left")
-        keep = (~F.col("__elig")) | (
-            F.col("__first").isNotNull()
-            & (F.col(f"__first.{id_col}") == F.col(id_col))
-            & (F.col("__first.pos") == F.col("pos")))
-        marked = joined.withColumn("__keep", keep)
-        out = (marked.groupBy(id_col)
-               .agg(F.count(F.lit(1)).alias("n_lines"),
-                    F.sum((F.col("__elig") & F.col("__keep"))
-                          .cast("long")).alias("n_kept"),
-                    F.array_sort(F.collect_list(
-                        F.when(F.col("__keep"),
-                               F.struct("pos", "line")))).alias("__ls")))
-        result = out.select(
-            F.col(id_col),
-            F.array_join(F.transform(F.col("__ls"),
-                                     lambda s: s["line"]),
-                         self.join_sep).alias(self.text_col),
-            "n_lines", "n_kept").localCheckpoint(eager=True)
+        result = _reassemble_lines(lines, new_firsts, id_col,
+                                   self.text_col, self.join_sep) \
+            .localCheckpoint(eager=True)
         # sink write and state append AFTER the result is materialized
         # and the sink BEFORE the commit row: a crash anywhere up to
         # the commit replays the batch against the old state and
@@ -1633,7 +1553,6 @@ def top_ngrams(df: DataFrame, id_col: str = "doc_id",
               .agg(F.count(F.lit(1)).alias("doc_freq")))
     top = (counts.orderBy(F.desc("doc_freq"), F.asc("shingle"))
            .limit(int(k)))
-    from pyspark.sql import Window
     win = Window.orderBy(F.desc("doc_freq"), F.asc("shingle"))
     return (top.withColumn("rank", F.row_number().over(win))
             .select(F.col("shingle").alias("ngram"), "doc_freq", "rank"))
@@ -1822,7 +1741,6 @@ def vocab_coverage(df: DataFrame, k: int = 100,
     total = counts.groupBy().agg(F.sum("cnt").alias("__total"))
     top = (counts.orderBy(F.desc("cnt"), F.asc("token"))
            .limit(int(k)))
-    from pyspark.sql import Window
     win = (Window.orderBy(F.desc("cnt"), F.asc("token"))
            .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     return (top.crossJoin(F.broadcast(total))
@@ -1945,7 +1863,6 @@ def sentence_chunks(df: DataFrame, capacity: int = 64,
     """
     if int(capacity) <= 0:
         raise ValueError("capacity must be positive")
-    from pyspark.sql import Window
     s = split_sentences(df, id_col, text_col)
     w = (Window.partitionBy(id_col).orderBy("sent_idx")
          .rowsBetween(Window.unboundedPreceding, -1))
@@ -2004,26 +1921,9 @@ class StoredBigramLM:
                 f"no stored LM at {self.path} — build() first")
         return self._log.read(spark, name)
 
-    @staticmethod
-    def _bigrams(df: DataFrame, id_col: str, text_col: str):
-        toks = F.split(F.col(text_col), " ")
-        base = df.select(F.col(id_col), toks.alias("t")) \
-            .where(F.size("t") >= 2)
-        idx = F.sequence(F.lit(1), F.size(F.col("t")) - 1)
-        return (base.select(
-            F.col(id_col),
-            F.explode(F.transform(
-                idx,
-                lambda i: F.struct(
-                    F.element_at(F.col("t"), i).alias("w1"),
-                    F.element_at(F.col("t"), i + 1).alias("w2"))))
-            .alias("b"))
-            .select(F.col(id_col), F.col("b.w1"), F.col("b.w2")),
-            base)
-
     def _write_batch(self, corpus: DataFrame, id_col: str,
                      text_col: str, replace: bool) -> dict:
-        big, base = self._bigrams(corpus, id_col, text_col)
+        big, base = _word_bigrams(corpus, id_col, text_col)
         big = big.persist()
         frames = {
             "vocab": base.select(F.explode("t").alias("w")).distinct(),
@@ -2067,14 +1967,10 @@ class StoredBigramLM:
             .agg(F.sum("c1").alias("c1"))
         pair = self._read(spark, "pair").groupBy("w1", "w2") \
             .agg(F.sum("c2").alias("c2"))
-        big, _ = self._bigrams(docs, id_col, text_col)
-        a = self.alpha
-        lp = F.log((F.coalesce(F.col("c2"), F.lit(0)) + F.lit(a))
-                   / (F.coalesce(F.col("c1"), F.lit(0))
-                      + F.lit(a * v)))
+        big, _ = _word_bigrams(docs, id_col, text_col)
         return (big.join(pair, ["w1", "w2"], "left")
                 .join(hist, "w1", "left")
-                .withColumn("lp", lp)
+                .withColumn("lp", _lidstone_logprob(self.alpha, v))
                 .groupBy(id_col)
                 .agg(F.count(F.lit(1)).alias("n_bigrams"),
                      F.avg("lp").alias("avg_logprob")))

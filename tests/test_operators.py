@@ -654,6 +654,39 @@ def test_remove_duplicate_spans_keeps_first(spark):
     assert (r["text"], r["n_tokens_cut"]) == ("tiny doc", 0)
 
 
+def test_remove_duplicate_spans_keeps_null_text(spark):
+    # a NULL-text doc passes through with NULL text and 0 tokens cut,
+    # as in the text_dedup_spans oracle, in both rewrite operators
+    docs = spark.createDataFrame(
+        [(1, "a b c d e f"), (2, "a b c d e g"), (3, None), (4, "x y")],
+        "doc_id long, text string")
+    want = {1: ("a b c d e f", 0), 2: ("g", 5), 3: (None, 0),
+            4: ("x y", 0)}
+    owned = []
+    rw, _ = text.rewrite_with_provenance(docs, k=5, owned_frames=owned)
+    for out in (text.remove_duplicate_spans(docs, k=5), rw):
+        assert {r["doc_id"]: (r["text"], r["n_tokens_cut"])
+                for r in out.collect()} == want
+    for f in owned:
+        f.unpersist()
+
+
+@pytest.mark.parametrize("op,kw", [
+    ("duplicate_spans", {"k": 0}),
+    ("remove_duplicate_spans", {"k": 0}),
+    ("remove_duplicate_spans", {"k": -1}),
+    ("span_provenance", {"k": 0}),
+    ("rewrite_with_provenance", {"k": 0}),
+    ("winnow_fingerprints", {"k": 0}),
+    ("winnow_fingerprints", {"w": 0}),
+])
+def test_gram_operators_reject_nonpositive_sizes(spark, op, kw):
+    docs = spark.createDataFrame([(1, "a b c d e f")],
+                                 "doc_id long, text string")
+    with pytest.raises(ValueError, match="must be >= 1"):
+        getattr(text, op)(docs, **kw)
+
+
 def test_remove_duplicate_spans_total_cut(spark):
     # two identical k-length docs: the second one is cut to nothing
     docs = spark.createDataFrame(
@@ -1162,7 +1195,7 @@ def test_rewrite_with_provenance_equals_separate_ops(spark, views):
                                            min_count=2).collect()))
     assert got_rw == want_rw
     assert got_prov == want_prov
-    assert len(owned) == 2
+    assert len(owned) == 1
     for f in owned:
         f.unpersist()
 

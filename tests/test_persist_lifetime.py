@@ -104,6 +104,21 @@ def test_winnow_matches_releases(clean_store, docs):
         docs, min_shared=1, owned_frames=o))
 
 
+def test_rewrite_with_provenance_releases(clean_store, docs):
+    def run(o):
+        rewritten, provenance = text.rewrite_with_provenance(
+            docs, k=5, owned_frames=o)
+        provenance.count()
+        return rewritten
+
+    _assert_releases(clean_store, run)
+
+
+def test_bigram_logprob_releases(clean_store, docs):
+    _assert_releases(clean_store, lambda o: text.bigram_logprob(
+        docs, owned_frames=o))
+
+
 def test_cosine_dup_pairs_block_releases(clean_store, vecs):
     _assert_releases(clean_store, lambda o: similarity.cosine_dup_pairs(
         vecs, threshold=0.5, rows_per_block=16, owned_frames=o))

@@ -187,6 +187,90 @@ def test_stored_lm_crashed_build_keeps_previous_lm(spark, tmp_path,
         == sorted(map(str, fresh.score(probe).collect())) != before
 
 
+def test_stored_lm_extend_equals_full_build(spark, views, tmp_path):
+    from pydin_spark.operators.text import StoredBigramLM
+    d = spark.table("documents").limit(60)
+    a = d.where("doc_id % 3 = 0")
+    b = d.where("doc_id % 3 <> 0")
+    inc = StoredBigramLM(str(tmp_path / "inc"))
+    inc.build(a)
+    inc.extend(b)
+    full = StoredBigramLM(str(tmp_path / "full"))
+    full.build(d)
+    probe = spark.table("documents").where(
+        "doc_id >= 60 AND doc_id < 90")
+    key = lambda df: sorted(
+        (r["doc_id"], r["n_bigrams"], f"{r['avg_logprob']:.9f}")
+        for r in df.collect())
+    assert key(inc.score(probe)) == key(full.score(probe))
+
+
+def test_stored_lm_self_score_equals_bigram_logprob(spark, views,
+                                                    tmp_path):
+    from pydin_spark.operators.text import StoredBigramLM, bigram_logprob
+    d = spark.table("documents").limit(40)
+    lm = StoredBigramLM(str(tmp_path / "lm"))
+    lm.build(d)
+    key = lambda df: sorted(
+        (r["doc_id"], r["n_bigrams"], f"{r['avg_logprob']:.9f}")
+        for r in df.collect())
+    assert key(lm.score(d)) == key(bigram_logprob(d))
+
+
+def test_stored_lm_maintain_collapses_and_serves_identically(
+        spark, views, tmp_path):
+    from pydin_spark.operators.text import StoredBigramLM
+    d = spark.table("documents").limit(50)
+    lm = StoredBigramLM(str(tmp_path / "lm"))
+    lm.build(d.where("doc_id < 20"))
+    lm.extend(d.where("doc_id >= 20 AND doc_id < 35"))
+    lm.extend(d.where("doc_id >= 35"))
+    probe = spark.table("documents").where(
+        "doc_id >= 50 AND doc_id < 70")
+    before = sorted(map(str, lm.score(probe).collect()))
+    out = lm.maintain(spark)
+    assert out.get("collapsed_batches") == 3
+    # one committed batch remains; serve is bit-identical
+    assert spark.read.parquet(f"{lm.path}/commits").count() == 1
+    assert sorted(map(str, lm.score(probe).collect())) == before
+
+
+def test_stored_lm_maintain_refuses_empty_collapse(spark, views,
+                                                   tmp_path):
+    """Pre-fix corruption shape (commit log naming batch ids whose
+    rows vanished, data files non-empty): maintain() must refuse to
+    collapse — collapsing would commit an empty LM over surviving
+    data."""
+    from pydin_spark.operators.text import StoredBigramLM
+    lm = StoredBigramLM(str(tmp_path / "lm"))
+    lm.build(spark.table("documents").limit(20))
+    # forge a log that names only batches absent from the data files
+    spark.createDataFrame([("dead1", 0), ("dead2", 1)],
+                          "batch string, seq long") \
+        .repartition(1).write.mode("overwrite") \
+        .parquet(f"{lm.path}/commits")
+    spark.catalog.refreshByPath(f"{lm.path}/commits")
+    with pytest.raises(ValueError, match="refusing to collapse"):
+        lm.maintain(spark)
+    # the data files survived the refusal
+    assert not spark.read.parquet(f"{lm.path}/vocab").isEmpty()
+
+
+def test_stored_lm_in_unified_state_sweep(spark, views, tmp_path):
+    from pydin_spark.functions.maintenance import maintain_states
+    from pydin_spark.operators.text import StoredBigramLM
+    lm = StoredBigramLM(str(tmp_path / "lm"))
+    lm.build(spark.table("documents").limit(20))
+    lm.extend(spark.table("documents").limit(30))
+    res = maintain_states(spark, [lm])
+    key = f"StoredBigramLM[{lm.path}]"
+    assert key in res and res[key].get("collapsed_batches") == 2
+    # unbuilt state is a no-op, not an error
+    empty = StoredBigramLM(str(tmp_path / "none"))
+    res2 = maintain_states(spark, [empty])
+    assert res2[f"StoredBigramLM[{empty.path}]"] == {}
+
+
 def test_only_stored_module_touches_a_commit_log():
     root = pathlib.Path(pydin_spark.__file__).parent
     offenders = []
