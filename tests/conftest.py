@@ -12,6 +12,11 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
+    # Pins spark.sql.shuffle.partitions but not
+    # spark.sql.adaptive.coalescePartitions.initialPartitionNum, which
+    # get_session sizes to 8 x SPARK_GRAFT_CPUS (256 when unset). AQE
+    # shuffles start at that width, so a plan-shape assertion (a skew
+    # split, a partition count) must hold at any width.
     import tempfile
     warehouse = tempfile.mkdtemp(prefix="pydin_wh_")
     session = get_session("pydin-spark-tests", master="local[4]",

@@ -275,9 +275,11 @@ def test_q5_shape_aqe_splits_hot_supplier(spark, views):
     chunk of lineitem (one tenant/bot dominating a fact table): with
     broadcast disabled (forcing the shuffled join skew handling
     applies to), AQE must mark the l_suppkey join skew-handled, and
-    the split must not change the result. Complements the bucketed
-    q5 path (StoredBuckets), which removes the orderkey shuffle
-    entirely — SCALE rows 2.65x bucketed vs 4.22x plain at 10x."""
+    the split must not change the result. Both must hold at any
+    shuffle width, i.e. whatever ``SPARK_GRAFT_CPUS`` sizes
+    ``initialPartitionNum`` to. Complements the bucketed q5 path
+    (StoredBuckets), which removes the orderkey shuffle entirely —
+    SCALE rows 2.65x bucketed vs 4.22x plain at 10x."""
     # inflate the KB-sized sf0.001 fact 32x (the skew handler works
     # on byte sizes; a 6k-row fixture sits under any sane threshold),
     # then hand ~20% of all rows to supplier 1
@@ -304,23 +306,33 @@ def test_q5_shape_aqe_splits_hot_supplier(spark, views):
             "spark.sql.adaptive.skewJoin."
             "skewedPartitionThresholdInBytes",
             "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            "spark.sql.adaptive.skewJoin.skewedPartitionFactor"]
+            "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
+            "spark.sql.adaptive.coalescePartitions.minPartitionSize"]
     saved = {k: spark.conf.get(k) for k in keys}
     try:
         spark.conf.set(keys[0], "-1")
         spark.conf.set(keys[1], "false")
         baseline = shape.count()
         spark.conf.set(keys[1], "true")
-        # KB-sized fixture: scale the byte thresholds so the same
+        # KB-sized fixture: scale the byte sizes down so the same
         # RELATIVE skew (hot partition >> median) triggers the split
-        # a 256 MB threshold triggers at warehouse scale
+        # a 256 MB threshold triggers at warehouse scale. That
+        # includes the coalesce floor, by the advisory size's factor
+        # (64 MB -> 4 KB, so 1 MB -> 64 B): left at 1 MB it folds
+        # the upstream orderkey join into one task, so the hot
+        # l_suppkey partition is a single map block, which AQE cannot
+        # split (it splits only at map-block boundaries). The split
+        # must not depend on SPARK_GRAFT_CPUS.
         spark.conf.set(keys[2], "4KB")
         spark.conf.set(keys[3], "4KB")
         spark.conf.set(keys[4], "2")
+        spark.conf.set(keys[5], "64b")
         rows = shape.collect()
         assert len(rows) == baseline
         plan = shape._jdf.queryExecution().executedPlan().toString()
-        assert "skew=true" in plan, plan[:2000]
+        # the l_suppkey join itself, not just any join, is split
+        assert any("SortMergeJoin(skew=true) [l_suppkey" in line
+                   for line in plan.splitlines()), plan[:4000]
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
