@@ -27,36 +27,18 @@ import datetime as dt
 import glob as _glob
 import gzip as _gzip
 import os
+import posixpath
 import re
 import shutil
 import warnings
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from . import fields as _fields
+from . import fs as _fs
 from .calendar import Day, Period
 from .sources import Database, Filesystem, Server, registry as default_registry
-
-
-#: characters Spark/Hive escape in partition directory names
-#: (ExternalCatalogUtils.escapePathName)
-_PART_ESCAPE = set('"#%\'*/:=?\\\x7f{[]^')
-
-
-def _partition_path_value(value) -> str:
-    """Render a partition value the way Spark writes its directory name:
-    NULL → ``__HIVE_DEFAULT_PARTITION__``, reserved characters →
-    ``%XX`` escapes — so recycle deletes the directory Spark actually
-    created instead of a phantom ``c=None`` path."""
-    if value is None:
-        return "__HIVE_DEFAULT_PARTITION__"
-    out = []
-    for ch in str(value):
-        if ch in _PART_ESCAPE or ord(ch) < 32:
-            out.append("%{:02X}".format(ord(ch)))
-        else:
-            out.append(ch)
-    return "".join(out)
 
 
 def _path_bytes(path: str) -> int | None:
@@ -72,6 +54,145 @@ def _path_bytes(path: str) -> int | None:
     except OSError:
         pass
     return None
+
+
+# ---------------------------------------------------------------------------
+# file-scoped recycle
+# ---------------------------------------------------------------------------
+
+#: hidden directory (Spark's readers skip ``_`` names) where a recycle
+#: stages the survivors of mixed files next to its manifest
+_RECYCLE_STAGING = "_recycle"
+
+
+def _recycle_files(spark: SparkSession, root: str, fmt: str,
+                   key_field_label: str, key_value) -> None:
+    """Delete-by-run-key on a file dataset that touches only the files
+    holding the recycled run's rows (reference ``models.py:469-475``;
+    Delta's DELETE rewrites only matching files the same way).
+
+    Each load writes one run into its own files, so the common case is
+    a metadata-only delete: no other run's rows are read or written. A
+    *mixed* file (compaction, NULL keys, an older full rewrite) has its
+    survivors staged under ``_recycle/`` with a manifest of the files
+    they replace; only then are those files deleted and the staged
+    files moved into their directories. A recycle first rolls forward
+    any complete staging it finds, so a crash at any point loses no
+    other run's rows, and re-running the recycle finishes the job.
+    Partition directories left empty are removed."""
+    if not _fs.exists(spark, root):
+        return
+    jroot = spark._jvm.org.apache.hadoop.fs.Path(root)
+    qroot = str(jroot.getFileSystem(spark._jsc.hadoopConfiguration())
+                .makeQualified(jroot).toString())
+    staging = f"{qroot}/{_RECYCLE_STAGING}"
+    emptied = _roll_forward(spark, staging)
+    try:
+        df = spark.read.format(fmt).load(root)
+    except AnalysisException as exc:
+        if exc.getCondition() != "UNABLE_TO_INFER_SCHEMA":
+            raise
+        df = None  # no data file left
+    if df is not None and key_field_label in df.columns:
+        key, value = F.col(key_field_label), F.lit(key_value)
+        keep = (key != value) | key.isNull()
+        files = _input_files(df.where(key == value))
+        # the row groups of pure files hold only `value`: parquet/ORC
+        # statistics prune them, so this reads footers only
+        mixed = _input_files(
+            spark.read.format(fmt).schema(df.schema)
+            .option("basePath", root).load(files).where(keep)
+        ) if files else []
+        if mixed:
+            _stage_survivors(spark, fmt, staging, mixed, keep)
+        elif (files and len(files) == len(df.inputFiles())
+              and all(posixpath.dirname(f) == qroot for f in files)):
+            # every row goes: a schema-only file keeps an unpartitioned
+            # dataset readable as an empty table, as a DELETE would
+            df.limit(0).write.format(fmt).mode("append").save(root)
+        for path in sorted(set(files) - set(mixed)):
+            _fs.delete(spark, path, recursive=False)
+            emptied.add(posixpath.dirname(path))
+        if mixed:
+            emptied |= _roll_forward(spark, staging)
+    _drop_empty_dirs(spark, qroot, emptied)
+    spark.catalog.refreshByPath(root)
+
+
+def _input_files(df: DataFrame) -> list[str]:
+    """Every file feeding ``df``, in the filesystem's own path form.
+    ``coalesce(1)`` lets the distinct plan without an Exchange.
+    ``input_file_name()`` is URL-encoded (the partition ``c=x:y`` lives
+    in ``c=x%3Ay`` and comes back as ``c=x%253Ay``), so each name is
+    decoded through ``java.net.URI``."""
+    jvm = df.sparkSession._jvm
+    rows = (df.select(F.input_file_name().alias("f")).coalesce(1)
+            .distinct().collect())
+    return sorted(
+        str(jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(r.f)).toString())
+        for r in rows)
+
+
+def _stage_survivors(spark: SparkSession, fmt: str, staging: str,
+                     mixed: list[str], keep: Column) -> None:
+    """Write the ``keep`` rows of ``mixed`` under ``staging``, one
+    directory per source directory, then the manifest that makes the
+    staging complete. Files read without a base path carry no
+    partition columns; their directory restores those."""
+    by_dir: dict[str, list[str]] = {}
+    for path in mixed:
+        by_dir.setdefault(posixpath.dirname(path), []).append(path)
+    plan = [("delete", path, None) for path in mixed]
+    for i, (target, paths) in enumerate(sorted(by_dir.items())):
+        staged = f"{staging}/data/{i}"
+        (spark.read.format(fmt).load(paths).where(keep)
+         .write.format(fmt).save(staged))
+        plan.append(("move", staged, target))
+    (spark.createDataFrame(plan, "op string, path string, target string")
+     .coalesce(1).write.parquet(f"{staging}/manifest"))
+
+
+def _roll_forward(spark: SparkSession, staging: str) -> set[str]:
+    """Finish a staged mixed-file rewrite: delete the files its
+    manifest lists, move the staged files into place and drop the
+    staging. Staging without a committed manifest is dropped unused
+    (nothing was deleted before the manifest landed). Returns the
+    directories files were deleted from."""
+    if not _fs.exists(spark, staging):
+        return set()
+    manifest = f"{staging}/manifest"
+    committed = _fs.exists(spark, manifest) and any(
+        not name.startswith(("_", "."))
+        for name in _fs.listdir(spark, manifest))
+    emptied = set()
+    if committed:
+        plan = spark.read.parquet(manifest).collect()
+        for op, path, _ in plan:
+            if op == "delete":
+                _fs.delete(spark, path, recursive=False, ignore_errors=True)
+                emptied.add(posixpath.dirname(path))
+        for op, path, target in plan:
+            if op == "move":
+                _fs.mkdirs(spark, target)
+                for name in _fs.listdir(spark, path):
+                    if not name.startswith(("_", ".")):
+                        _fs.rename(spark, f"{path}/{name}",
+                                   f"{target}/{name}")
+    _fs.delete(spark, staging)
+    return emptied
+
+
+def _drop_empty_dirs(spark: SparkSession, qroot: str, dirs: set) -> None:
+    """Remove every directory below ``qroot`` on the way from ``dirs``
+    up that is now empty, deepest first."""
+    below = set()
+    for d in dirs:
+        while d.startswith(qroot + "/"):
+            below.add(d)
+            d = posixpath.dirname(d)
+    for d in sorted(below, key=lambda p: p.count("/"), reverse=True):
+        if _fs.exists(spark, d) and not _fs.listdir(spark, d):
+            _fs.delete(spark, d)
 
 
 # ---------------------------------------------------------------------------
@@ -355,8 +476,11 @@ class FileModel(Model, Extractable, Loadable):
                 else self.resolved_path)
 
     def recycle(self, key_field_label: str, key_value) -> None:
-        """Rewrite the dataset minus the recycled run's rows. On Delta/JDBC
-        this is a real DELETE; on raw files it is read-filter-overwrite."""
+        """Rewrite the dataset minus the recycled run's rows: the path of
+        the row formats (CSV, JSON, Avro) and of ``single_file`` sinks.
+        Parquet/ORC directories and lakehouse Tables delete only the
+        recycled run's files (:func:`_recycle_files`); Delta and JDBC run
+        a real DELETE."""
         df = self.extract()
         if key_field_label not in df.columns:
             return
@@ -414,57 +538,20 @@ class Parquet(FileModel):
         writer.save(self._write_target())
 
     def recycle(self, key_field_label: str, key_value) -> None:
-        """Partition-scoped recycle when the sink is partitioned: only
-        partitions containing the recycled run's rows are rewritten
-        (dynamic partition overwrite) — the difference between touching
-        one day and rewriting 100 TB. Unpartitioned sinks fall back to
-        the full read-filter-overwrite."""
-        if not self.partition_by:
+        """File-scoped recycle, partitioned or not: only the files that
+        hold the recycled run's rows are deleted or rewritten
+        (:func:`_recycle_files`). A ``single_file`` sink keeps the base
+        rewrite."""
+        if self.single_file:
             return super().recycle(key_field_label, key_value)
-        df = self.extract()
-        if key_field_label not in df.columns:
-            return
-        affected = (df.where(F.col(key_field_label) == F.lit(key_value))
-                    .select(*self.partition_by).distinct())
-        # materialize the affected-partition list BEFORE overwriting:
-        # both it and `kept` must never re-read the rewritten files
-        affected_rows = affected.collect()
-        affected = self.spark.createDataFrame(affected_rows,
-                                              schema=affected.schema)
-        # null-safe semi join: a NULL partition value must still match
-        # its own partition row, or survivors in the NULL partition are
-        # dropped from the rewrite and then deleted with the directory
-        cond = None
-        for c in self.partition_by:
-            e = df[c].eqNullSafe(affected[c])
-            cond = e if cond is None else cond & e
-        kept = (df.join(F.broadcast(affected), cond, "left_semi")
-                .where((F.col(key_field_label) != F.lit(key_value))
-                       | F.col(key_field_label).isNull())
-                .localCheckpoint())
-        (kept.write.mode("overwrite").partitionBy(*self.partition_by)
-         .option("partitionOverwriteMode", "dynamic")
-         .format(self.format_name).save(self.resolved_path))
-        # dynamic overwrite never touches partitions with no surviving
-        # rows — delete those directories explicitly
-        survived = {tuple(r) for r in (kept.select(*self.partition_by)
-                                       .distinct().collect())}
-        for row in affected_rows:
-            if tuple(row) in survived:
-                continue
-            part_dir = os.path.join(
-                self.resolved_path,
-                *[f"{c}={_partition_path_value(row[c])}"
-                  for c in self.partition_by])
-            if os.path.isdir(part_dir):
-                shutil.rmtree(part_dir)
-        self.spark.catalog.refreshByPath(self.resolved_path)
+        _recycle_files(self.spark, self.resolved_path, self.format_name,
+                       key_field_label, key_value)
 
 
 class ORC(Parquet):
     """ORC source/sink (engine extension). The entire Parquet surface —
     predicate pushdown, column pruning, partitioned layout,
-    partition-scoped recycle — is inherited through the format-generic
+    file-scoped recycle — is inherited through the format-generic
     reader/writer; the format choice is usually dictated by the
     surrounding warehouse (Hive-era lakes are ORC)."""
 
@@ -535,8 +622,9 @@ class Delta(Parquet):
 
     Why it matters at 100 TB: ``recycle`` and watermark reloads become
     metadata-level ``DELETE``/``MERGE`` operations (transaction-log
-    rewrite of only the affected files) instead of the raw-parquet
-    read-filter-overwrite, and concurrent writers get ACID isolation.
+    rewrite of only the affected files, which the raw-parquet
+    file-scoped recycle approximates without a log), and concurrent
+    writers get ACID isolation.
     Absent the package — as in this container — construction raises
     with the exact dependency to add instead of Spark's generic
     DATA_SOURCE_NOT_FOUND at action time.
@@ -1100,18 +1188,8 @@ class Table(Model, Extractable, Loadable):
             if self.audit is not None:
                 self.audit.query(sql, "D", records=deleted)
             return
-        if not os.path.isdir(self.fs_path):
-            return
-        df = self.extract()
-        if key_field_label not in df.columns:
-            return
-        kept = df.where(
-            (F.col(key_field_label) != F.lit(key_value))
-            | F.col(key_field_label).isNull()).localCheckpoint()
-        shutil.rmtree(self.fs_path)
-        kept.write.mode("overwrite").parquet(self.fs_path)
-        # drop stale file listings for the rewritten path
-        self.spark.catalog.refreshByPath(self.fs_path)
+        _recycle_files(self.spark, self.fs_path, "parquet",
+                       key_field_label, key_value)
 
 
 class Select(Model, Extractable):

@@ -155,7 +155,7 @@ def test_delta_model_gated_on_package(tmp_path):
 
 def test_orc_roundtrip_and_partitioned_recycle(spark, tmp_path):
     """ORC inherits the Parquet model surface: roundtrip, lineage key,
-    partition-scoped recycle through the format-generic writer."""
+    file-scoped recycle through the format-generic reader."""
     from pyspark.sql import functions as F
 
     from pydin_spark import ORC, Pipeline, Select

@@ -1,4 +1,4 @@
-"""Partition-scoped recycle: only affected partitions rewritten;
+"""Recycle on a partitioned sink touches only the recycled run's files;
 untouched partition files must keep their identity (mtime/inode)."""
 
 import glob
