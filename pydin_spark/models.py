@@ -423,11 +423,7 @@ class FileModel(Model, Extractable, Loadable):
 
     def prepare(self) -> None:
         if self.cleanup:
-            target = self.resolved_path
-            if os.path.isdir(target):
-                shutil.rmtree(target)
-            elif os.path.isfile(target):
-                os.remove(target)
+            self.prepare_force()
 
     def load(self, df: DataFrame) -> int:
         df = self.attach_key_field(df)
@@ -496,11 +492,8 @@ class FileModel(Model, Extractable, Loadable):
         self.spark.catalog.refreshByPath(self.resolved_path)
 
     def prepare_force(self) -> None:
-        target = self.resolved_path
-        if os.path.isdir(target):
-            shutil.rmtree(target)
-        elif os.path.isfile(target):
-            os.remove(target)
+        # Hadoop FS, not os: a Filesystem root may be a URI
+        _fs.delete(self.spark, self.resolved_path, ignore_errors=True)
 
 
 class Parquet(FileModel):
@@ -991,8 +984,7 @@ class Table(Model, Extractable, Loadable):
             # truncate-vs-delete is the JDBC writer's `truncate` option at
             # overwrite time (reference models.py:454-459); nothing eager.
             return
-        if os.path.isdir(self.fs_path):
-            shutil.rmtree(self.fs_path)
+        _fs.delete(self.spark, self.fs_path, ignore_errors=True)
 
     def load(self, df: DataFrame) -> int:
         df = self.attach_key_field(df)

@@ -69,6 +69,22 @@ ENGINE_CONF: dict[str, str] = {
     # gateway, a second get_session with different extra_conf) the
     # value is silently ignored, same caveat as driver-memory below.
     "spark.sql.codegen.cache.maxEntries": "2000",
+    # Parquet page codec for every file the engine writes: sinks,
+    # lakehouse Tables, recycle staging, compaction, stored states,
+    # rollup/similarity indexes and the staged tables of
+    # register_tables (ORC already defaults to zstd). Unlike the
+    # shuffle bytes below, these are at rest: written once, then kept
+    # and scanned many times.
+    # Measured on a 4-core host, perfbench etl_daily (seed 17, ten
+    # alternating pairs): a pass wrote 2.55 MB instead of 3.67 MB with
+    # snappy (median, -30%), its final sink files 1.75 instead of
+    # 2.72 MB, while the traced sink-write time (3.98 vs 3.95 s) and
+    # executor CPU (1.10 vs 1.03 s) stayed within 1% and 7%. Spark,
+    # DuckDB and pyarrow all read it.
+    # For readers without zstd, pass
+    # extra_conf={"spark.sql.parquet.compression.codec": "snappy"} to
+    # get_session, or .option("compression", "snappy") on one write.
+    "spark.sql.parquet.compression.codec": "zstd",
     # Single-threaded native BLAS inside Python workers (round 11,
     # guide §4): Spark's task parallelism already fills every core, so
     # each worker's numpy must NOT spawn its own ncpu BLAS threads —

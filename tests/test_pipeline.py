@@ -182,3 +182,27 @@ def test_cleanup_overwrites(spark, sf_dir, tmp_path):
     run()
     run()
     assert spark.read.parquet(str(tmp_path / "s/r")).count() == 5
+
+
+def test_cleanup_overwrites_on_uri_root(spark, tmp_path):
+    """A Filesystem root given as a URI: cleanup=True still empties the
+    Table and the Parquet sink before each run."""
+    reg = SourceRegistry(autoload=False)
+    reg.register(Filesystem("lake", tmp_path.as_uri()))
+    rows = "select * from values (1), (2), (3) as t(x)"
+
+    def run():
+        Pipeline(Select(text=rows),
+                 Table(source_name="lake", schema_name="s", table_name="t",
+                       cleanup=True),
+                 spark=spark, registry=reg).run()
+        Pipeline(Select(text=rows),
+                 Parquet(source_name="lake", file_name="p", cleanup=True),
+                 spark=spark, registry=reg).run()
+
+    run()
+    run()
+    for sub in ("s/t", "p"):
+        path = f"{tmp_path.as_uri()}/{sub}"
+        spark.catalog.refreshByPath(path)
+        assert spark.read.parquet(path).count() == 3

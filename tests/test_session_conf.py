@@ -4,7 +4,9 @@ PYDIN_SHUFFLE_CODEC=zstd is the documented production value for
 GB-per-stage shuffles (halved bytes, measured at the 100x replica).
 ``get_session`` reads the env var on each call and rejects a codec
 Spark would not accept. ``SPARK_GRAFT_CPUS`` (local core count and
-shuffle widths) is read the same way and must be a positive integer."""
+shuffle widths) is read the same way and must be a positive integer.
+The Parquet codec is a plain ENGINE_CONF default, zstd, that a
+caller's ``extra_conf`` overrides."""
 
 from types import SimpleNamespace
 
@@ -81,3 +83,17 @@ def test_cpus_rejects_non_positive_integer(monkeypatch, builder, value):
     with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
         session_mod.get_session("cpus-check")
     assert builder.master_url is None and builder.conf == {}
+
+
+def test_parquet_codec_defaults_to_zstd(builder):
+    assert session_mod.ENGINE_CONF[
+        "spark.sql.parquet.compression.codec"] == "zstd"
+    session_mod.get_session("parquet-codec")
+    assert builder.conf["spark.sql.parquet.compression.codec"] == "zstd"
+
+
+def test_parquet_codec_extra_conf_wins(builder):
+    session_mod.get_session(
+        "parquet-codec",
+        extra_conf={"spark.sql.parquet.compression.codec": "snappy"})
+    assert builder.conf["spark.sql.parquet.compression.codec"] == "snappy"
